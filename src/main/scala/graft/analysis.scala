@@ -793,32 +793,9 @@ object TextAnalysis {
   // corpus-sized pass and amortizes LSM-style.
   // ---------------------------------------------------------------------
 
-  /** Same-process writer serialization + the cross-driver write-intent
-    * marker — the shared [[IndexLifecycle]] writer gate. */
-  private def withLexIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    IndexLifecycle.withWriter(s, path)(body)
-
-  /** The LIVE artifact root of a (possibly versioned) lexical index —
-    * postings/doclens/terms/stats resolve through here; the tombstone
-    * and pending logs stay at the PATH ROOT, shared across versions. */
-  private[graft] def lexLiveRoot(s: SparkSession, path: String): String =
-    Similarity.resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: flat artifacts present OR any committed version
-    * (keep-N GC retires the flat root once the window fills). */
-  private[graft] def lexIndexExists(s: SparkSession, path: String): Boolean =
-    ScratchPaths.artifactExists(s, s"$path/postings/_SUCCESS") ||
-      lexLiveRoot(s, path) != path
-
-  private[graft] def lexTombstonesOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
-
-  private[graft] def lexPendingOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
-
-  private def minusLexTombstones(df: DataFrame, s: SparkSession,
-                                 path: String): DataFrame =
-    IndexLifecycle.minusIdLog(df, s, s"$path/tombstones", "doc_id")
+  /** The family's lifecycle descriptor: writer gate, live root, id logs,
+    * forget, maintenance and versioned compaction ([[StandingIndex]]). */
+  private val Lex = StandingIndex.Lex
 
   /** The folded dictionary of a resolved root: segment contributions
     * collapsed (distinct = the crash-replay guard) then summed per term;
@@ -841,7 +818,7 @@ object TextAnalysis {
   /** Live doc lengths: stored rows minus the tombstone log. */
   private[graft] def lexDoclensOf(s: SparkSession, path: String,
                                   root: String): DataFrame =
-    minusLexTombstones(IndexLifecycle.readStamped(s, s"$root/doclens"), s, path)
+    Lex.minusTombstones(IndexLifecycle.readStamped(s, s"$root/doclens"), s, path)
 
   /** Segment count of a root's contribution log — MEMOIZED per root
     * (r20, VERDICT r19 #5 + advice #4): probes, serving-stream setups,
@@ -883,7 +860,7 @@ object TextAnalysis {
   private[graft] def lexPostingsOf(s: SparkSession, path: String,
                                    root: String): DataFrame = {
     val base = IndexLifecycle.readStamped(s, s"$root/postings").drop("tb")
-    minusLexTombstones(
+    Lex.minusTombstones(
       if (lexHasSegments(s, root)) base.distinct() else base, s, path)
   }
 
@@ -898,7 +875,7 @@ object TextAnalysis {
     * a gate-visible index with missing statistics (the buildIndexFrom
     * write-order discipline). */
   def buildLexIndex(s: SparkSession, d: String, path: String): Long =
-    withLexIndexWriter(s, path) {
+    Lex.writer(s, path) {
       val toks = lexTokens(Tables.fanOut(Tables.documents(s, d), "doc_id"))
         .transform(Tables.maybePersist)
       val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
@@ -933,7 +910,7 @@ object TextAnalysis {
     * versions within one probe), statistics folded as of now, postings
     * bucket-pruned then crash-dupe-collapsed and tombstone-subtracted. */
   def lexIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
-    val root = lexLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     val qterms = bm25QueryTerms(lexTermsOf(s, root), lexStatsOf(s, root))
       .transform(Tables.maybePersist) // 3 rows — feeds the bucket filter AND the score join
     // probed buckets, derived with the WRITE side's own expression —
@@ -953,7 +930,7 @@ object TextAnalysis {
     val pruned = IndexLifecycle.readStamped(s, s"$root/postings")
       .filter(col("tb").isin(tbs: _*))
       .drop("tb")
-    val postings = minusLexTombstones(
+    val postings = Lex.minusTombstones(
       if (lexHasSegments(s, root))
         pruned.join(broadcast(qterms.select("term")), Seq("term"), "left_semi")
           .distinct()
@@ -970,34 +947,16 @@ object TextAnalysis {
     * and a crash-windowed partial replay re-appends byte-identical rows
     * that the read-side distinct collapses. */
   def mergeLexBatchIntoIndex(batch: DataFrame, path: String, seg: Long): (Long, Long) =
-    withLexIndexWriter(batch.sparkSession, path) {
+    Lex.writer(batch.sparkSession, path) {
       val s = batch.sparkSession
-      val root = lexLiveRoot(s, path) // appends fold into the LIVE version
+      val root = IndexLifecycle.resolveIndexRoot(s, path) // appends fold into the LIVE version
       val docs0 = batch.select(col("doc_id").cast("long"), col("text"))
         .dropDuplicates("doc_id") // in-batch exact-id replays
         .transform(Tables.maybePersist)
-      // pending-forget consult (the media q137 discipline): a takedown
-      // that arrived BEFORE this id's first admit is delivered now — the
-      // arrival is refused via a permanent tombstone and the pending
-      // entry is consumed; replays of this batch can never admit it
-      if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = docs0.select("doc_id")
-          .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-            Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          val novel = delivered
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          IndexLifecycle.consumeIdLog(s, s"$path/pending", "doc_id", delivered)
-        }
-      }
+      Lex.consultPending(s, path, root, docs0)
       // replay guards: the doclens registry (already admitted) and the
       // tombstone log (forgotten ids never resurrect)
-      val fresh = minusLexTombstones(
+      val fresh = Lex.minusTombstones(
           docs0.join(IndexLifecycle.readStamped(s, s"$root/doclens").select("doc_id"),
             Seq("doc_id"), "left_anti"), s, path)
         .transform(Tables.maybePersist)
@@ -1073,65 +1032,29 @@ object TextAnalysis {
     * contribution rows that the read-side distinct collapses. Returns
     * the newly-tombstoned count. */
   def forgetLexFromIndex(requests: DataFrame, path: String, seg: Long): Long =
-    withLexIndexWriter(requests.sparkSession, path) {
-      val s = requests.sparkSession
-      val root = lexLiveRoot(s, path)
-      val marked = requests.select(col("doc_id").cast("long"))
-        .dropDuplicates("doc_id")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.readStamped(s, s"$root/doclens"), Seq("doc_id"), "left")
-        .localCheckpoint()
-      val present = marked.filter(col("dl").isNotNull)
-      val early = marked.filter(col("dl").isNull).select("doc_id")
-      // The tombstone and pending tails are INDEPENDENT legs (guide
-      // §2.6, r21): both derive from the already-checkpointed `marked`
-      // frame — the pending leg reads no log the tombstone leg writes —
-      // so they overlap. The tombstone leg keeps the calling thread (it
-      // can re-enter the writer gate through compaction).
-      val (n, _) = Par.run2(
-        {
-          val n0 = present.count()
-          if (n0 > 0) {
-            // the two negative contribution appends are independent of
-            // each other — overlap them; the tombstone registry stays
-            // LAST (a crash above replays in full — identical negatives
-            // collapse; a crash after replays to nothing)
-            Par.run2(
-              // negative df contributions, derived by locating the victims'
-              // postings rows (request-sized broadcast onto a pushdown id scan)
-              IndexLifecycle.readStamped(s, s"$root/postings")
-                .join(broadcast(present.select("doc_id")), Seq("doc_id"), "left_semi")
-                .select("doc_id", "term").distinct() // collapse crash-dupe segments
-                .groupBy("term")
-                .agg((count(lit(1)) * lit(-1L)).cast("long").as("df"))
-                .withColumn("seg", lit(seg))
-                .write.mode("append").parquet(s"$root/terms"),
-              present
-                .agg((count(lit(1)) * lit(-1L)).as("n_docs"),
-                  (sum(col("dl")) * lit(-1L)).as("tot"))
-                .selectExpr("cast(n_docs as bigint) as n_docs",
-                  "cast(tot as bigint) as tot", s"cast($seg as bigint) as seg")
-                .write.mode("append").parquet(s"$root/stats"))
-            present.select("doc_id").write.mode("append").parquet(s"$path/tombstones")
-          }
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactLexIndex(s, path)
-          n0
-        },
-        if (!early.isEmpty)
-          early.write.mode("append").parquet(s"$path/pending"))
-      n
-    }
+    Lex.forget(requests, path, carry = Seq("dl")) { (root, present) =>
+      val s = present.sparkSession
+      // the two negative contribution appends are independent of each
+      // other — overlap them; the tombstone registry stays LAST (a crash
+      // above replays in full — identical negatives collapse; a crash
+      // after replays to nothing)
+      Par.run2(
+        // negative df contributions, derived by locating the victims'
+        // postings rows (request-sized broadcast onto a pushdown id scan)
+        IndexLifecycle.readStamped(s, s"$root/postings")
+          .join(broadcast(present.select("doc_id")), Seq("doc_id"), "left_semi")
+          .select("doc_id", "term").distinct() // collapse crash-dupe segments
+          .groupBy("term")
+          .agg((count(lit(1)) * lit(-1L)).cast("long").as("df"))
+          .withColumn("seg", lit(seg))
+          .write.mode("append").parquet(s"$root/terms"),
+        present
+          .agg((count(lit(1)) * lit(-1L)).as("n_docs"),
+            (sum(col("dl")) * lit(-1L)).as("tot"))
+          .selectExpr("cast(n_docs as bigint) as n_docs",
+            "cast(tot as bigint) as tot", s"cast($seg as bigint) as seg")
+          .write.mode("append").parquet(s"$root/stats")): Unit
+    }(maybeCompactLexIndex(requests.sparkSession, path))
 
   /** Scheduled compaction, VERSIONED (the compactMediaIndex discipline):
     * rewrites postings/doclens minus the tombstoned docs, collapses the
@@ -1142,23 +1065,22 @@ object TextAnalysis {
     * point re-run costs counts, not a corpus copy. Logs stay at the
     * PATH ROOT (audit trail + the merge-side replay guard forever). */
   def compactLexIndex(s: SparkSession, path: String): Unit =
-    withLexIndexWriter(s, path) {
-      val root = lexLiveRoot(s, path)
-      val victims =
-        if (ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          IndexLifecycle.readStamped(s, s"$root/doclens")
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_semi").count()
-        else 0L
-      val segments = IndexLifecycle.readStamped(s, s"$root/stats")
-        .select("seg").distinct().count()
-      if (victims > 0 || segments > 1) {
-        val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
+    Lex.compact(s, path) { (root, victims) =>
+      Option.when(victims > 0 || lexSegCount(s, root) > 1) { newRoot =>
         val dl = lexDoclensOf(s, path, root).transform(Tables.maybePersist)
-        // all four writes land in an UNCOMMITTED version directory —
-        // invisible until the _COMMITTED marker below — so their order
-        // is free: overlap them two-by-two (guide §2.6, r21; dl's two
-        // consumers share one thread so the persisted frame fills once)
+        // the live postings are the one source of the dictionary: a
+        // replayed merge whose fresh set shrank (a takedown landed between
+        // its crash and its replay) leaves two non-identical term
+        // segments that the read-side distinct cannot collapse, so the
+        // df of the collapsed base segment is re-derived here exactly as
+        // n_docs/tot are re-derived from the live doclens
+        val postings = Lex.minusTombstones(
+            IndexLifecycle.readStamped(s, s"$root/postings").drop("tb").distinct(), s, path)
+          .transform(Tables.maybePersist)
+        // all four writes land in an UNCOMMITTED version directory, so
+        // their order is free: overlap them two-by-two (guide §2.6, r21;
+        // each persisted frame's two consumers share one thread so it
+        // fills once)
         Par.run2(
           {
             dl.write.mode("overwrite").parquet(s"$newRoot/doclens")
@@ -1168,17 +1090,13 @@ object TextAnalysis {
               .write.mode("overwrite").parquet(s"$newRoot/stats")
           },
           {
-            lexTermsOf(s, root).withColumn("seg", lit(-1L))
-              .write.mode("overwrite").parquet(s"$newRoot/terms")
-            minusLexTombstones(
-                IndexLifecycle.readStamped(s, s"$root/postings").drop("tb").distinct(), s, path)
-              .withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
+            postings.withColumn("tb", pmod(hash(col("term")), lit(LexBuckets)))
               .repartition(col("tb"))
               .write.mode("overwrite").partitionBy("tb").parquet(s"$newRoot/postings")
-          })
-        // atomic commit + keep-N GC (the r19 write-path wiring, shared tail)
-        IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("postings", "doclens", "terms", "stats"))
+            postings.groupBy("term").agg(count(lit(1)).as("df"))
+              .withColumn("seg", lit(-1L))
+              .write.mode("overwrite").parquet(s"$newRoot/terms")
+          }): Unit
       }
     }
 
@@ -1205,20 +1123,14 @@ object TextAnalysis {
     * (doc_id) scan of doclens. The gate rows sit safely under both
     * defaults (q142: 1 segment; q143: 1/7 ≈ 14% victims), so their
     * plans and oracles are unchanged. */
-  private def maybeCompactLexIndex(s: SparkSession, path: String): Unit = {
-    val root = lexLiveRoot(s, path)
-    // stamp-memoized: a write tail (which just appended a stats row)
-    // re-derives over the ≤ lexCompactSegments+1-row artifact — bounded
-    // by this very policy; probe reads between mutations pay zero jobs
-    val segs = lexSegCount(s, root)
-    val frag =
-      segs - 1 > IndexLifecycle.confInt(s, "spark.graft.lexCompactSegments", 16)
-    if (frag || IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/doclens").select("doc_id"),
-        s"$path/tombstones", "doc_id", "spark.graft.lexCompactTombstoneFrac",
-        memoKey = root))
-      compactLexIndex(s, path)
-  }
+  private def maybeCompactLexIndex(s: SparkSession, path: String): Unit =
+    // stamp-memoized segment count: a write tail (which just appended a
+    // stats row) re-derives over the ≤ lexCompactSegments+1-row artifact
+    // — bounded by this very policy; probe reads between mutations pay
+    // zero jobs
+    Lex.maintain(s, path, due = root => lexSegCount(s, root) - 1 >
+        IndexLifecycle.confInt(s, "spark.graft.lexCompactSegments", 16))(
+      compactLexIndex(s, path))
 
   /** The q142 gate chain: lazy build → fold the +100000-rekeyed delta
     * docs in → probe the MERGED index. The oracle recomputes BM25 from
@@ -1230,7 +1142,7 @@ object TextAnalysis {
   def lexIndexMerge(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q142-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+    if (!Lex.exists(s, path)) buildLexIndex(s, d, path)
     mergeLexBatchIntoIndex(
       Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .selectExpr("doc_id + 100000 as doc_id", "text"),
@@ -1248,7 +1160,7 @@ object TextAnalysis {
   def lexIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q143-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+    if (!Lex.exists(s, path)) buildLexIndex(s, d, path)
     forgetLexFromIndex(
       Tables.documents(s, d).filter(col("doc_id") % 7 === 3).select("doc_id"),
       path, seg = 1L)
@@ -1271,7 +1183,7 @@ object TextAnalysis {
   def lexIndexMaintain(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q144-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+    if (!Lex.exists(s, path)) buildLexIndex(s, d, path)
     mergeLexBatchIntoIndex(
       Tables.documents(s, d).filter(col("doc_id") % 7 === 3)
         .selectExpr("doc_id + 100000 as doc_id", "text"),
@@ -3453,7 +3365,7 @@ object TextAnalysis {
     // process — the q102/q119/q126 gate pattern); q132b is the build
     "q132_lex_index_probe" -> ((s, d) => {
       val path = lexIndexPathFor(d)
-      if (!lexIndexExists(s, path)) buildLexIndex(s, d, path)
+      if (!Lex.exists(s, path)) buildLexIndex(s, d, path)
       lexIndexProbeStored(s, d, path)
     }),
     "q132b_lex_index_build" -> ((s, d) => {

@@ -730,41 +730,19 @@ object Dedup {
   // compaction is the one corpus-sized pass and amortizes LSM-style.
   // ---------------------------------------------------------------------
 
-  private def withDedupIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    IndexLifecycle.withWriter(s, path)(body)
-
-  /** The LIVE artifact root of a (possibly versioned) dedup index; the
-    * tombstone/pending logs stay at the PATH ROOT, shared across
-    * versions (audit trail + the merge-side replay guard forever). */
-  private[graft] def dedupLiveRoot(s: SparkSession, path: String): String =
-    Similarity.resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: flat artifacts present OR any committed version
-    * (keep-N GC retires the flat root once the window fills). */
-  private[graft] def dedupIndexExists(s: SparkSession, path: String): Boolean =
-    ScratchPaths.artifactExists(s, s"$path/bands/_SUCCESS") ||
-      dedupLiveRoot(s, path) != path
-
-  private[graft] def dedupTombstonesOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
-
-  private[graft] def dedupPendingOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
-
-  private def minusDedupTombstones(df: DataFrame, s: SparkSession,
-                                   path: String): DataFrame =
-    IndexLifecycle.minusIdLog(df, s, s"$path/tombstones", "doc_id")
+  /** The family's lifecycle descriptor ([[StandingIndex]]). */
+  private val Dd = StandingIndex.Dedup
 
   /** Live band rows: stored minus the tombstone log (skipped — plan
     * untouched — when no log exists, so q102's pinned shape holds). */
   private[graft] def dedupBandsOf(s: SparkSession, path: String,
                                   root: String): DataFrame =
-    minusDedupTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+    Dd.minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
 
   /** Live shingle rows (the registry): stored minus the tombstone log. */
   private[graft] def dedupShinglesOf(s: SparkSession, path: String,
                                      root: String): DataFrame =
-    minusDedupTombstones(IndexLifecycle.readStamped(s, s"$root/shingles"), s, path)
+    Dd.minusTombstones(IndexLifecycle.readStamped(s, s"$root/shingles"), s, path)
 
   /** Build the STANDING dedup index as parquet artifacts (the q100
     * export discipline): `path/shingles` = (doc_id, sh) and
@@ -776,7 +754,7 @@ object Dedup {
     * gates key "built" on bands/_SUCCESS, so a crash mid-build can never
     * leave a gate-visible index missing its verify-side artifact. */
   def buildDedupIndex(s: SparkSession, d: String, path: String): Long =
-    withDedupIndexWriter(s, path) {
+    Dd.writer(s, path) {
       val index = signedCorpus(s,
           Tables.documents(s, d).select(col("doc_id"), col("text")))
         .transform(Tables.maybePersist)
@@ -798,35 +776,20 @@ object Dedup {
     * arrival refused via a permanent tombstone). Returns
     * (admitted, refused). */
   def mergeDedupBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
-    withDedupIndexWriter(batch.sparkSession, path) {
+    Dd.writer(batch.sparkSession, path) {
       val s = batch.sparkSession
-      val root = dedupLiveRoot(s, path) // appends fold into the LIVE version
+      val root = IndexLifecycle.resolveIndexRoot(s, path) // appends fold into the LIVE version
       val docs0 = batch.select(col("doc_id").cast("long"), col("text"))
         .dropDuplicates("doc_id") // in-batch exact-id replays
         .transform(Tables.maybePersist)
-      // pending-forget consult (the media q137 / lexical q142 discipline)
-      if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = docs0.select("doc_id")
-          .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-            Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          val novel = delivered
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          IndexLifecycle.consumeIdLog(s, s"$path/pending", "doc_id", delivered)
-        }
-      }
+      Dd.consultPending(s, path, root, docs0)
       // replay guards: the shingle registry (already admitted) and the
       // tombstone log (forgotten ids never resurrect). localCheckpoint
       // HERE (r21): it is this anti-join whose lineage reads the
       // shingles path the registry append below writes (the read-write-
       // cycle discipline), and cutting at the narrow fresh frame lets
       // the idempotent-replay fast path skip the signing job outright
-      val fresh = minusDedupTombstones(
+      val fresh = Dd.minusTombstones(
           docs0.join(IndexLifecycle.readStamped(s, s"$root/shingles").select("doc_id"),
             Seq("doc_id"), "left_anti"), s, path)
         .localCheckpoint()
@@ -863,46 +826,8 @@ object Dedup {
     * (already-tombstoned and absent ids append nothing). Returns the
     * newly-tombstoned count. */
   def forgetDedupFromIndex(requests: DataFrame, path: String): Long =
-    withDedupIndexWriter(requests.sparkSession, path) {
-      val s = requests.sparkSession
-      val root = dedupLiveRoot(s, path)
-      val marked = requests.select(col("doc_id").cast("long"))
-        .dropDuplicates("doc_id")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-          Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.readStamped(s, s"$root/shingles")
-            .select(col("doc_id"), lit(1).as("present")),
-          Seq("doc_id"), "left")
-        .localCheckpoint()
-      val present = marked.filter(col("present").isNotNull).select("doc_id")
-      val early = marked.filter(col("present").isNull).select("doc_id")
-      // tombstone and pending tails are INDEPENDENT legs (guide §2.6,
-      // r21): both derive from the checkpointed `marked` frame, and the
-      // pending leg reads no log the tombstone leg writes — overlap
-      // them; the tombstone leg keeps the calling thread (it can
-      // re-enter the writer gate through compaction)
-      val (n, _) = Par.run2(
-        {
-          val n0 = present.count()
-          if (n0 > 0)
-            present.write.mode("append").parquet(s"$path/tombstones")
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactDedupIndex(s, path)
-          n0
-        },
-        if (!early.isEmpty)
-          early.write.mode("append").parquet(s"$path/pending"))
-      n
-    }
+    Dd.forget(requests, path)((_, _) => ())(
+      maybeCompactDedupIndex(requests.sparkSession, path))
 
   /** Scheduled compaction, VERSIONED (the family discipline): rewrites
     * shingles/bands minus the tombstoned docs — collapsing crash-dupe
@@ -911,26 +836,15 @@ object Dedup {
     * keep-N GC retires the tail. No-ops when there are no live victims —
     * the fixed-point re-run costs a count, not a corpus copy. */
   def compactDedupIndex(s: SparkSession, path: String): Unit =
-    withDedupIndexWriter(s, path) {
-      val root = dedupLiveRoot(s, path)
-      val victims =
-        if (ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          IndexLifecycle.readStamped(s, s"$root/shingles")
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_semi").count()
-        else 0L
-      if (victims > 0) {
-        val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
-        // both rewrites land in an UNCOMMITTED version directory (the
-        // _COMMITTED marker below is what flips readers), so their order
-        // is free: overlap them (guide §2.6, r21)
+    Dd.compact(s, path) { (root, victims) =>
+      Option.when(victims > 0) { newRoot =>
+        // both rewrites land in an UNCOMMITTED version directory, so
+        // their order is free: overlap them (guide §2.6, r21)
         Par.run2(
           dedupShinglesOf(s, path, root)
             .write.mode("overwrite").parquet(s"$newRoot/shingles"),
           dedupBandsOf(s, path, root).distinct() // crash-dupe band rows fold
-            .write.mode("overwrite").parquet(s"$newRoot/bands"))
-        IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("shingles", "bands"))
+            .write.mode("overwrite").parquet(s"$newRoot/bands")): Unit
       }
     }
 
@@ -940,14 +854,8 @@ object Dedup {
     * of shingles, only when a tombstone log exists; the q146 gate row's
     * 1/10 = 10% victims sit under the default, so its lazy read path is
     * what the oracle certifies. */
-  private def maybeCompactDedupIndex(s: SparkSession, path: String): Unit = {
-    val root = dedupLiveRoot(s, path)
-    if (IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/shingles").select("doc_id"),
-        s"$path/tombstones", "doc_id", "spark.graft.dedupCompactTombstoneFrac",
-        memoKey = root))
-      compactDedupIndex(s, path)
-  }
+  private def maybeCompactDedupIndex(s: SparkSession, path: String): Unit =
+    Dd.maintain(s, path)(compactDedupIndex(s, path))
 
   /** Probe the STORED index — the production q102 path: candidates and
     * verification read the parquet artifacts, never re-signing the
@@ -957,7 +865,7 @@ object Dedup {
     * skipped — plan untouched — when no log exists, so the un-maintained
     * gate artifact keeps its pinned shape). */
   def incrementalDedupStored(s: SparkSession, d: String, path: String): DataFrame = {
-    val root = dedupLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     incrementalDedupProbe(s, Tables.documents(s, d),
       dedupBandsOf(s, path, root), dedupShinglesOf(s, path, root))
   }
@@ -972,7 +880,7 @@ object Dedup {
   def dedupIndexMerge(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q145-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!dedupIndexExists(s, path)) buildDedupIndex(s, d, path)
+    if (!Dd.exists(s, path)) buildDedupIndex(s, d, path)
     mergeDedupBatchIntoIndex(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 7)
         .selectExpr("doc_id + 50000 as doc_id", "text"),
@@ -990,7 +898,7 @@ object Dedup {
   def dedupIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = ScratchPaths.indexPathFor(
       s"q146-${ScratchPaths.tableFingerprint(d, "documents")}", d)
-    if (!dedupIndexExists(s, path)) buildDedupIndex(s, d, path)
+    if (!Dd.exists(s, path)) buildDedupIndex(s, d, path)
     forgetDedupFromIndex(
       Tables.documents(s, d).filter(col("doc_id") % 10 === 7).select("doc_id"),
       path)
@@ -1943,7 +1851,7 @@ object Dedup {
     // the band rows read BACK from the artifact).
     "q102_incremental_dedup" -> ((s, d) => {
       val path = indexPathFor(d)
-      if (!dedupIndexExists(s, path)) buildDedupIndex(s, d, path)
+      if (!Dd.exists(s, path)) buildDedupIndex(s, d, path)
       incrementalDedupStored(s, d, path)
     }),
     "q102b_index_build" -> ((s, d) => {

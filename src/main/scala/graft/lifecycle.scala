@@ -3,18 +3,23 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The SHARED standing-index lifecycle core (r19, VERDICT r18 #8).
+/** The SHARED standing-index lifecycle core.
   *
-  * Three standing-index families — ANN (q119/q134/q135/q140/q141),
-  * perceptual media (q136–q139b), lexical BM25 (q132/q142/q143) — share
-  * one lifecycle contract: build / probe / ingest-merge / forget /
-  * versioned compaction / keep-N GC / statistic re-pricing. The
-  * version-resolution + marker-commit machinery is single-sourced in
-  * [[Similarity]] (`resolveIndexRoot` / `nextVersionName` /
-  * `pruneVersions` / `keepVersions`); this object hosts what each
-  * family used to copy — the writer gate, the append-only id-log
-  * readers, and the commit+GC tail — so a fourth family (and the three
-  * today) cannot drift on the contract.
+  * Five standing-index families — ANN (q119/q134/q135/q140/q141), IVF-PQ
+  * (q126/q147–q150), perceptual media (q136–q139b), lexical BM25
+  * (q132/q142–q144) and MinHash dedup (q102/q145/q146) — honour one
+  * at-least-once contract, because the reference's consumer replays its
+  * topic from the start on every restart (`Consumer/kafkaConsumer.js:53`):
+  * a writer gate, an append-only tombstone log and a pending-forget log
+  * at the PATH ROOT (shared across versions, never carried), lazy
+  * deletion on every read, versioned compaction committed by an atomic
+  * `_COMMITTED` marker, and keep-N version GC. Each family is one
+  * [[StandingIndex]] descriptor; the steps are written once, here, and a
+  * family file keeps only its kernels (build, admit/encode, probe, the
+  * compaction rewrite). This object hosts the version machinery
+  * (`resolveIndexRoot` / `nextVersionName` / `pruneVersions`, one
+  * listing of `versions/`) and the id-log, memo and footer helpers the
+  * descriptor ops share.
   */
 object IndexLifecycle {
 
@@ -26,13 +31,8 @@ object IndexLifecycle {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  def withLock[T](path: String)(body: => T): T =
+  private[graft] def withLock[T](path: String)(body: => T): T =
     locks.computeIfAbsent(path, _ => new Object).synchronized(body)
-
-  /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) —
-    * every artifact writer of every family enters through here. */
-  def withWriter[T](s: SparkSession, path: String)(body: => T): T =
-    withLock(path)(ScratchPaths.withWriteIntent(s, path)(body))
 
   /** An append-only id log (tombstones, pending-forgets) at `dir`:
     * read-or-empty behind the _SUCCESS-keyed existence guard (a crash
@@ -81,7 +81,7 @@ object IndexLifecycle {
     * guarded by the writer gate (a concurrent append would be
     * list-racy, exactly like the Spark count it replaces). */
   private[graft] def parquetFooterRows(s: SparkSession, dir: String): Long = {
-    val fs = Similarity.hadoopFs(s, dir)
+    val fs = hadoopFs(s, dir)
     val conf = s.sparkContext.hadoopConfiguration
     val base = new org.apache.hadoop.fs.Path(dir)
     val baseDepth = base.depth()
@@ -159,7 +159,7 @@ object IndexLifecycle {
     * [[parquetFooterRows]] contract per subdirectory). */
   private[graft] def parquetFooterRowsByPartition(
       s: SparkSession, dir: String, col: String): Seq[(String, Long)] = {
-    val fs = Similarity.hadoopFs(s, dir)
+    val fs = hadoopFs(s, dir)
     fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$col="))
       .map(st => (st.getPath.getName.stripPrefix(s"$col="),
@@ -227,7 +227,7 @@ object IndexLifecycle {
       .join(broadcast(delivered.select(idCol)), Seq(idCol), "left_anti")
       .localCheckpoint()
     if (rest.isEmpty)
-      Similarity.hadoopFs(s, dir)
+      hadoopFs(s, dir)
         .delete(new org.apache.hadoop.fs.Path(dir), true): Unit
     else rest.write.mode("overwrite").parquet(dir)
   }
@@ -318,7 +318,7 @@ object IndexLifecycle {
     * byteLength) from one flat content summary — (0, 0) when absent. */
   private[graft] def dirStamp(s: SparkSession, dir: String): (Long, Long) =
     try {
-      val cs = Similarity.hadoopFs(s, dir)
+      val cs = hadoopFs(s, dir)
         .getContentSummary(new org.apache.hadoop.fs.Path(dir))
       (cs.getFileCount, cs.getLength)
     } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
@@ -381,18 +381,329 @@ object IndexLifecycle {
   /** Commit a fully-written version directory: the atomic marker-create
     * flips resolution to `newRoot` (in-flight readers of the old
     * version keep their files end-to-end), then keep-N GC retires the
-    * tail — r19's rule that every versioning write path runs its own
-    * GC, so an unattended refit/compaction stream can never accumulate
-    * versions × corpus on disk. Caller holds the writer gate. */
+    * tail — every versioning write path runs its own GC, so an
+    * unattended refit/compaction stream can never accumulate versions ×
+    * corpus on disk. Caller holds the writer gate. */
   def commitVersion(s: SparkSession, path: String, newRoot: String,
                     flatArtifacts: Seq[String]): Unit = {
-    Similarity.hadoopFs(s, path).create(
+    hadoopFs(s, path).create(
       new org.apache.hadoop.fs.Path(s"$newRoot/_COMMITTED"), false).close()
-    Similarity.pruneVersions(s, path, Similarity.keepVersions(s),
-      flatArtifacts): Unit
+    pruneVersions(s, path, keepVersions(s), flatArtifacts): Unit
     // retired-root memo entries die with the commit (r20): resolution
     // just flipped, so every cached fact keyed under the old roots is
     // stale by definition — and the map must not grow with history
     memoSweep(path, newRoot)
   }
+
+  // ---------------------------------------------------------------------
+  // VERSIONED INDEX ROOTS (r18): a rebuild, refit or compaction writes a
+  // fresh `$path/versions/v%05d` directory and commits it by CREATING a
+  // `_COMMITTED` marker — readers resolve the highest committed version.
+  // Marker-create is atomic on every Hadoop FileSystem including object
+  // stores (an atomic rename-OVERWRITE of a manifest file is not),
+  // in-flight probes that resolved before the commit keep reading the
+  // old version's files (which are never touched), and the old version
+  // is retained for exactly that reason. A path with no committed
+  // version is the flat layout (the build's artifacts at the root —
+  // implicitly version 1).
+  // ---------------------------------------------------------------------
+
+  private[graft] def hadoopFs(s: SparkSession, path: String) =
+    new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** The ONE listing of `$path/versions`: every `v<digits>` directory
+    * (committed or in flight) and the committed ones, newest first. */
+  private def versions(s: SparkSession, path: String): (Seq[String], Seq[String]) = {
+    val fs = hadoopFs(s, path)
+    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
+    if (!fs.exists(vdir)) (Nil, Nil)
+    else {
+      val all = fs.listStatus(vdir).iterator.map(_.getPath.getName)
+        .filter(_.matches("v\\d+")).toSeq
+      // fixed-width names: lexicographic order == numeric order
+      (all, all.filter(n => fs.exists(
+        new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED"))).sorted.reverse)
+    }
+  }
+
+  /** The LIVE artifact root of a (possibly versioned) index — every
+    * reader and incremental writer of every family resolves through
+    * here, once per operation. */
+  private[graft] def resolveIndexRoot(s: SparkSession, path: String): String =
+    versions(s, path)._2.headOption.fold(path)(v => s"$path/versions/$v")
+
+  /** Next version directory name: one past the highest present (committed
+    * OR in-flight — a crashed rebuild's uncommitted directory is never
+    * reused). The flat root counts as version 1. */
+  private[graft] def nextVersionName(s: SparkSession, path: String): String =
+    f"v${versions(s, path)._1.map(_.drop(1).toInt).foldLeft(1)(math.max) + 1}%05d"
+
+  /** Allocate and CREATE the next version directory under the path lock:
+    * [[nextVersionName]] counts in-flight directories, so without the
+    * mkdirs a second rebuild started during a first one's lockless phase
+    * would be handed the same name and both would write into one
+    * directory. */
+  private[graft] def allocateVersion(s: SparkSession, path: String): String =
+    withLock(path) {
+      val nr = s"$path/versions/${nextVersionName(s, path)}"
+      hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
+      nr
+    }
+
+  /** The version the live one replaced: the second-newest committed
+    * version, else the flat root (implicit v1) when its `flatGate`
+    * artifact is still present, else None (predecessor pruned). */
+  private[graft] def previousVersionRoot(s: SparkSession, path: String,
+                                         flatGate: String): Option[String] =
+    versions(s, path)._2.drop(1).headOption.map(n => s"$path/versions/$n")
+      .orElse(
+        if (ScratchPaths.artifactExists(s, s"$path/$flatGate/_SUCCESS")) Some(path)
+        else None)
+
+  /** Keep-N window for [[pruneVersions]] — configurable per session;
+    * default live + one committed predecessor (in-flight pre-swap
+    * readers, rollback, and the q140 rebuild report all need it). */
+  private[graft] def keepVersions(s: SparkSession): Int =
+    s.conf.getOption("spark.graft.indexKeepVersions").map(_.toInt).getOrElse(2)
+
+  /** VERSION GC (r18): keeps the LIVE version plus the `keep − 1` most
+    * recent committed predecessors; deletes older committed versions,
+    * uncommitted directories OLDER than the live version (crashed
+    * rebuilds — an uncommitted dir NEWER than live may be an in-flight
+    * rebuild and is never touched), and, once `keep` committed versions
+    * exist, the flat artifacts (the implicit v1). The root id logs are
+    * never touched: the tombstones are the audit trail and the
+    * merge-side replay guard. Returns the number of retired version
+    * roots. Caller holds the writer gate. */
+  private[graft] def pruneVersions(s: SparkSession, path: String, keep: Int,
+                                   flatArtifacts: Seq[String]): Long = {
+    require(keep >= 1, s"keep must be >= 1: $keep")
+    val fs = hadoopFs(s, path)
+    val (all, committed) = versions(s, path)
+    if (committed.isEmpty) 0L
+    else {
+      val live = committed.head
+      val stale = committed.drop(keep) ++
+        all.filterNot(committed.contains).filter(_ < live)
+      var n = stale.count(v =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/versions/$v"), true)).toLong
+      if (committed.size >= keep &&
+          fs.exists(new org.apache.hadoop.fs.Path(s"$path/${flatArtifacts.head}"))) {
+        flatArtifacts.foreach { a =>
+          fs.delete(new org.apache.hadoop.fs.Path(s"$path/$a"), true): Unit
+        }
+        n += 1
+      }
+      n
+    }
+  }
+}
+
+/** One standing-index family's lifecycle shape, and the lifecycle steps
+  * written once over it.
+  *
+  * @param idCol            the id column of every artifact and id log
+  * @param registry         the artifact whose ids are the admitted set —
+  *                         written LAST by a merge, so it is the replay
+  *                         guard, and the locate side of a takedown
+  * @param gate             the flat artifact whose `_SUCCESS` means "built"
+  *                         (written last by the build)
+  * @param artifacts        the per-version artifacts, the GC's flat list
+  *                         (its head is the flat-root probe)
+  * @param tombstoneFracKey the session conf bounding live victims as a
+  *                         fraction of stored rows (default 0.25)
+  * @param auditCols        registry columns the tombstone log records
+  *                         beside the id (the stored cell for ANN/PQ)
+  */
+final case class StandingIndex(idCol: String, registry: String, gate: String,
+                               artifacts: Seq[String], tombstoneFracKey: String,
+                               auditCols: Seq[String] = Nil) {
+  import IndexLifecycle._
+
+  def tombstonesDir(path: String): String = s"$path/tombstones"
+  def pendingDir(path: String): String = s"$path/pending"
+
+  /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) —
+    * every artifact writer of the family enters through here. */
+  def writer[T](s: SparkSession, path: String)(body: => T): T =
+    withLock(path)(ScratchPaths.withWriteIntent(s, path)(body))
+
+  /** Lazy-build gate: the flat gate artifact present OR any committed
+    * version — keep-N GC retires the flat root once the version window
+    * fills, so keying "built" on the flat `_SUCCESS` alone would
+    * silently rebuild a live versioned index. */
+  def exists(s: SparkSession, path: String): Boolean =
+    ScratchPaths.artifactExists(s, s"$path/$gate/_SUCCESS") ||
+      resolveIndexRoot(s, path) != path
+
+  def tombstones(s: SparkSession, path: String): DataFrame =
+    idLogOf(s, tombstonesDir(path), idCol)
+
+  def pending(s: SparkSession, path: String): DataFrame =
+    idLogOf(s, pendingDir(path), idCol)
+
+  /** The lazy-deletion read guard: `df` minus the tombstone log (plan
+    * untouched when no log exists). */
+  def minusTombstones(df: DataFrame, s: SparkSession, path: String): DataFrame =
+    minusIdLog(df, s, tombstonesDir(path), idCol)
+
+  /** The merge's pending-forget consult: a takedown that arrived BEFORE
+    * an id's first admit is delivered by that arrival — the id moves to
+    * the tombstone log (permanent, so no replay of the batch can admit
+    * it; audit columns null, the row was never stored) and the pending
+    * entry is consumed. A crash between the tombstone append and the
+    * consume leaves the id in BOTH logs; the anti-join against the
+    * tombstones already present makes the replay append nothing, so only
+    * the lost consume re-runs. Gated on the log, so the hot ingest path
+    * pays nothing when no early takedown is outstanding. The caller's
+    * admit leg must still subtract the tombstones. Caller holds the
+    * writer gate. */
+  def consultPending(s: SparkSession, path: String, root: String,
+                     batchIds: DataFrame): Unit =
+    if (ScratchPaths.artifactExists(s, s"${pendingDir(path)}/_SUCCESS")) {
+      val delivered = batchIds.select(idCol)
+        .join(hintedIdLog(s, pendingDir(path), idCol), Seq(idCol), "left_semi")
+        .localCheckpoint()
+      if (!delivered.isEmpty) {
+        lazy val stored = readStamped(s, s"$root/$registry").schema
+        val novel = delivered
+          .join(hintedIdLog(s, tombstonesDir(path), idCol), Seq(idCol), "left_anti")
+          .selectExpr(idCol +: auditCols.map(c =>
+            s"cast(null as ${stored(c).dataType.sql}) as $c"): _*)
+          .localCheckpoint()
+        if (!novel.isEmpty)
+          novel.write.mode("append").parquet(tombstonesDir(path))
+        consumeIdLog(s, pendingDir(path), idCol, delivered)
+      }
+    }
+
+  /** Right-to-be-forgotten, LSM-style. ONE checkpointed pass marks each
+    * request id present (located in the live registry, carrying `carry`
+    * columns) or absent; already-tombstoned and already-pending ids drop
+    * out, so re-delivery appends nothing. Present ids run `onPresent`
+    * (root, present) — the family's extra appends — then append to the
+    * tombstone log (lazy deletion: effective at once, no stored file
+    * touched); absent ids append to the pending log, consumed by the
+    * id's first arrival ([[consultPending]]). The two legs are
+    * independent (both read only the checkpointed frame), so they
+    * overlap; the tombstone leg keeps the calling thread because its
+    * `maintain` tail may re-enter the writer gate through compaction.
+    * `maintain` runs UNCONDITIONALLY: a crash after the tombstone append
+    * replays into zero novel ids, which must not skip the check forever
+    * (below the amortized bound it costs zero Spark jobs). Returns the
+    * newly-tombstoned count. */
+  def forget(requests: DataFrame, path: String, carry: Seq[String] = auditCols)
+            (onPresent: (String, DataFrame) => Unit)(maintain: => Unit): Long = {
+    val s = requests.sparkSession
+    writer(s, path) {
+      val root = resolveIndexRoot(s, path)
+      val marked = requests.select(col(idCol).cast("long")).dropDuplicates(idCol)
+        .join(hintedIdLog(s, tombstonesDir(path), idCol), Seq(idCol), "left_anti")
+        .join(hintedIdLog(s, pendingDir(path), idCol), Seq(idCol), "left_anti")
+        .join(readStamped(s, s"$root/$registry")
+            .select((idCol +: carry).map(col) :+ lit(true).as("_present"): _*),
+          Seq(idCol), "left")
+        .localCheckpoint()
+      val present = marked.filter(col("_present").isNotNull).drop("_present")
+      val early = marked.filter(col("_present").isNull).select(idCol)
+      Par.run2(
+        {
+          val n = present.count()
+          if (n > 0) {
+            onPresent(root, present)
+            present.select((idCol +: auditCols).map(col): _*)
+              .write.mode("append").parquet(tombstonesDir(path))
+          }
+          maintain
+          n
+        },
+        if (!early.isEmpty) early.write.mode("append").parquet(pendingDir(path)))._1
+    }
+  }
+
+  /** Stored registry rows the tombstone log hides in `root` — 0 without
+    * a log. */
+  private def liveVictims(s: SparkSession, path: String, root: String): Long =
+    if (ScratchPaths.artifactExists(s, s"${tombstonesDir(path)}/_SUCCESS"))
+      readStamped(s, s"$root/$registry")
+        .join(hintedIdLog(s, tombstonesDir(path), idCol), Seq(idCol), "left_semi")
+        .count()
+    else 0L
+
+  /** The MAINTENANCE POLICY: run `compact` when `due` fires for the live
+    * root (a family trigger — lex's fragmentation) or the live victims
+    * reach `tombstoneFracKey` of the stored registry rows
+    * ([[IndexLifecycle.tombstoneHeavy]], amortized to zero Spark jobs
+    * below its bound). Called from write tails inside the writer gate. */
+  def maintain(s: SparkSession, path: String, due: String => Boolean = _ => false)
+              (compact: => Unit): Unit = {
+    val root = resolveIndexRoot(s, path)
+    if (due(root) || tombstoneHeavy(s,
+        readStamped(s, s"$root/$registry").select(idCol),
+        tombstonesDir(path), idCol, tombstoneFracKey, memoKey = root))
+      compact
+  }
+
+  /** Versioned compaction: `plan` sees the live root and its live victim
+    * count and returns the family's rewrite when one is due; the rewrite
+    * fills a freshly allocated version directory (invisible until its
+    * `_COMMITTED` marker, so its writes may overlap in any order), then
+    * the commit flips readers and keep-N GC retires the tail. No-ops —
+    * writes nothing — when `plan` declines. */
+  def compact(s: SparkSession, path: String)
+             (plan: (String, Long) => Option[String => Unit]): Unit =
+    writer(s, path) {
+      val root = resolveIndexRoot(s, path)
+      plan(root, liveVictims(s, path, root)).foreach { rewrite =>
+        val newRoot = allocateVersion(s, path)
+        rewrite(newRoot)
+        commitVersion(s, path, newRoot, artifacts)
+      }
+    }
+
+  /** SNAPSHOT-REFIT-CATCHUP: the corpus-sized `snapshot(root, newRoot)`
+    * runs WITHOUT the writer gate, so merges and takedowns keep landing on
+    * the live version meanwhile; `catchup(root, newRoot, fit)` then
+    * replays what landed — with the snapshot's fit — under the gate,
+    * before the commit and GC. The root
+    * logs need no carry. `beforeCatchup` is the deterministic seam a
+    * concurrency spec drives a mid-refit merge through. Returns the new
+    * version's root. */
+  def refit[A](s: SparkSession, path: String, beforeCatchup: () => Unit)
+              (snapshot: (String, String) => A)
+              (catchup: (String, String, A) => Unit): String = {
+    val (root, newRoot) =
+      withLock(path)((resolveIndexRoot(s, path), allocateVersion(s, path)))
+    val fit = snapshot(root, newRoot)
+    beforeCatchup()
+    writer(s, path) {
+      catchup(root, newRoot, fit)
+      commitVersion(s, path, newRoot, artifacts)
+    }
+    newRoot
+  }
+
+  /** The version the live one replaced ([[IndexLifecycle.previousVersionRoot]]). */
+  def previousRoot(s: SparkSession, path: String): Option[String] =
+    previousVersionRoot(s, path, gate)
+
+  /** Keep-N version GC over this family's flat artifacts. */
+  def prune(s: SparkSession, path: String, keep: Int): Long =
+    writer(s, path)(pruneVersions(s, path, keep, artifacts))
+}
+
+object StandingIndex {
+  val Ann = StandingIndex("vec_id", registry = "assignments", gate = "assignments",
+    Seq("assignments", "centroids", "cellstat"),
+    "spark.graft.annCompactTombstoneFrac", auditCols = Seq("c_label"))
+  val Pq = StandingIndex("vec_id", registry = "codes", gate = "codes",
+    Seq("codes", "codebook", "coarse", "stat"),
+    "spark.graft.pqCompactTombstoneFrac", auditCols = Seq("c_label"))
+  val Media = StandingIndex("doc_id", registry = "vecs", gate = "bands",
+    Seq("vecs", "bands", "stat"), "spark.graft.mediaCompactTombstoneFrac")
+  val Lex = StandingIndex("doc_id", registry = "doclens", gate = "postings",
+    Seq("postings", "doclens", "terms", "stats"), "spark.graft.lexCompactTombstoneFrac")
+  val Dedup = StandingIndex("doc_id", registry = "shingles", gate = "bands",
+    Seq("shingles", "bands"), "spark.graft.dedupCompactTombstoneFrac")
 }

@@ -1513,23 +1513,11 @@ object MediaOps {
   private[graft] def mediaIndexPathFor(d: String): String =
     mediaIndexScratch("q136", d)
 
-  /** The LIVE artifact root of a (possibly versioned) media index —
-    * [[compactMediaIndex]] writes each compaction as a new committed
-    * version (r18), so vecs/bands/stat reads resolve through here while
-    * the append-only logs (tombstones/pending) stay at the path root,
-    * shared across versions. The [[Similarity.resolveIndexRoot]]
-    * marker-commit machinery, verbatim. */
-  private[graft] def mediaLiveRoot(s: SparkSession, path: String): String =
-    Similarity.resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: the index exists when its flat artifacts are
-    * present OR any committed version is — keep-N GC retires the flat
-    * root once the version window fills (r19), so keying "built" on the
-    * flat bands/_SUCCESS alone would silently rebuild a live versioned
-    * index from scratch. */
-  private[graft] def mediaIndexExists(s: SparkSession, path: String): Boolean =
-    ScratchPaths.artifactExists(s, s"$path/bands/_SUCCESS") ||
-      mediaLiveRoot(s, path) != path
+  /** The family's lifecycle descriptor ([[StandingIndex]]): vecs/bands/
+    * stat resolve through its live root (each compaction is a new
+    * committed version, r18) while the tombstone and pending logs stay
+    * at the path root, shared across versions. */
+  private val Media = StandingIndex.Media
 
   /** Once-per-life build from any (doc_id, v, bk) hash frame: vecs +
     * FULL-width band keys, plus a 1-row stat artifact carrying the
@@ -1545,7 +1533,7 @@ object MediaOps {
     * every other writer (r17 advice, medium). */
   private[graft] def buildIndexFrom(hashes0: DataFrame, path: String,
                                     bandsPerDoc: Int = 4): Long =
-    withMediaIndexWriter(hashes0.sparkSession, path) {
+    Media.writer(hashes0.sparkSession, path) {
       val s = hashes0.sparkSession
       import s.implicits._
       val hashes = hashes0.transform(Tables.maybePersist)
@@ -1567,7 +1555,7 @@ object MediaOps {
   /** The stored dial width of an index artifact (the stat's first leg —
     * every probe/merge reads the width through here). */
   private[graft] def storedWidth(s: SparkSession, path: String): Int =
-    storedWidthAt(s, mediaLiveRoot(s, path))
+    storedWidthAt(s, IndexLifecycle.resolveIndexRoot(s, path))
 
   /** [[storedWidth]] against an ALREADY-RESOLVED version root — probes
     * resolve the live root exactly once at plan assembly (r19 advice: a
@@ -1664,7 +1652,7 @@ object MediaOps {
     * measure candidate volume before/after a dial re-price. */
   private[graft] def probeCandidates(delta: DataFrame, path: String): DataFrame = {
     val s = delta.sparkSession
-    val root = mediaLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
   }
 
@@ -1677,7 +1665,7 @@ object MediaOps {
     Similarity.withFns(s)
     val dBands = delta.selectExpr("doc_id as delta_id",
       s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+    val iBands = Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
       .selectExpr("doc_id as idx_id", "band_idx",
         s"${packedPrefixExpr("band_hash", width)} as band_hash")
     iBands
@@ -1692,11 +1680,11 @@ object MediaOps {
     // resolve the live version ONCE: a compaction committing mid-plan
     // must never mix versions inside one probe (old bands joined against
     // new vecs) — the probeAnnIndex resolve-once discipline (r19 advice)
-    val root = mediaLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     val delta = delta0.transform(Tables.maybePersist)
     val cand = probeCandidatesAt(delta, path, root, storedWidthAt(s, root))
     val verified = cand
-      .join(minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+      .join(Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
           .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
       .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
         Seq("delta_id"))
@@ -1759,18 +1747,18 @@ object MediaOps {
     * within Hamming 6) instead of scalar Hamming. */
   def videoIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
     Similarity.withFns(s)
-    val root = mediaLiveRoot(s, path) // resolved ONCE for bands+vecs+stat
+    val root = IndexLifecycle.resolveIndexRoot(s, path) // resolved ONCE for bands+vecs+stat
     val width = storedWidthAt(s, root)
     val delta = videoDeltaHashes(s, d).transform(Tables.maybePersist)
     val dBands = delta.selectExpr("doc_id as delta_id",
       s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-    val iBands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+    val iBands = Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
       .selectExpr("doc_id as idx_id", "band_idx",
         s"${packedPrefixExpr("band_hash", width)} as band_hash")
     val verified = iBands
       .join(broadcast(dBands), Seq("band_idx", "band_hash"))
       .select(col("delta_id"), col("idx_id")).distinct()
-      .join(minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+      .join(Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
           .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
       .join(broadcast(delta.select(col("doc_id").as("delta_id"), col("v").as("va"))),
         Seq("delta_id"))
@@ -1882,16 +1870,6 @@ object MediaOps {
         .stripMargin.replace("\n", " ")
   }
 
-  /** Same-process writer serialization for the media index artifacts —
-    * the [[Similarity]] index-lock discipline; multi-driver deployments
-    * keep the documented single-writer-per-path contract. */
-  /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) — every
-    * media-artifact writer enters through here ([[IndexLifecycle]], the
-    * r19 shared core); same-process re-entry (merge-triggered
-    * compaction) is depth-tracked, never marker-stripping. */
-  private def withMediaIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    IndexLifecycle.withWriter(s, path)(body)
-
   /** ONLINE ingest-dedup merge (q136's streaming leg — the admission
     * decision an image-ingest pipeline makes per arriving batch): hash
     * the batch through the decode kernels, probe the STANDING index at
@@ -1929,10 +1907,10 @@ object MediaOps {
     * split at the next are not constructible on demand). */
   private[graft] def mergeHashesIntoIndex(hashes0: DataFrame, path: String,
                                           family: String): (Long, Long) =
-    withMediaIndexWriter(hashes0.sparkSession, path) {
+    Media.writer(hashes0.sparkSession, path) {
       val s = hashes0.sparkSession
       Similarity.withFns(s)
-      val root = mediaLiveRoot(s, path) // appends fold into the LIVE version
+      val root = IndexLifecycle.resolveIndexRoot(s, path) // appends fold into the LIVE version
       val st = IndexLifecycle.readStamped(s, s"$root/stat")
         .select("width", "bands_per_doc", "priced_n").head()
       val (width, pricedN) = (st.getInt(0), st.getLong(2))
@@ -1940,49 +1918,24 @@ object MediaOps {
         .dropDuplicates("doc_id") // in-batch exact-id replays
         .transform(Tables.maybePersist)
       // pending-forget consult (r17 advice #5): a takedown that arrived
-      // BEFORE this id's first admit is delivered now — the arrival is
-      // refused via a tombstone (permanent, so a replay of this batch
-      // cannot admit it) and the pending entry is consumed. Gated on the
-      // artifact so the hot ingest path pays nothing when no early
-      // takedown is outstanding.
-      if (ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = hashes.select("doc_id")
-          .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"),
-            Seq("doc_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          // crash-replay guard (r19 advice): the two writes below are
-          // not atomic — a crash between them leaves the id in BOTH
-          // logs, and the replayed batch would append a duplicate
-          // tombstone row (inflating n_tombstones in the q137 report).
-          // Anti-join against the tombstones already present, so the
-          // replay appends nothing and only the pending consume (the
-          // write the crash lost) re-runs.
-          val novel = delivered
-            .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-              Seq("doc_id"), "left_anti")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          IndexLifecycle.consumeIdLog(s, s"$path/pending", "doc_id", delivered)
-        }
-      }
+      // BEFORE this id's first admit is delivered now
+      Media.consultPending(s, path, root, hashes)
       // replay guards: already-stored ids AND tombstoned ids never
       // (re-)admit — the latter is the right-to-be-forgotten survival
       // under at-least-once replay (the ANN merge's r17 discipline)
-      val fresh = minusTombstones(
+      val fresh = Media.minusTombstones(
           hashes.join(IndexLifecycle.readStamped(s, s"$root/vecs").select("doc_id"),
             Seq("doc_id"), "left_anti"), s, path)
         .transform(Tables.maybePersist)
       val dBands = fresh.selectExpr("doc_id as delta_id",
         s"posexplode(transform(bk, x -> ${packedPrefixExpr("x", width)})) as (band_idx, band_hash)")
-      val iBands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
+      val iBands = Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
         .selectExpr("doc_id as idx_id", "band_idx",
           s"${packedPrefixExpr("band_hash", width)} as band_hash")
       val dupIds = iBands
         .join(broadcast(dBands), Seq("band_idx", "band_hash"))
         .select(col("delta_id"), col("idx_id")).distinct()
-        .join(minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+        .join(Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
             .select(col("doc_id").as("idx_id"), col("v").as("vb")), Seq("idx_id"))
         .join(broadcast(fresh.select(col("doc_id").as("delta_id"), col("v").as("va"))),
           Seq("delta_id"))
@@ -2038,74 +1991,19 @@ object MediaOps {
   // nothing appended → identical rewrite → identical report).
   // ---------------------------------------------------------------------
 
-  private[graft] def tombstonesOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/tombstones", "doc_id")
-
-  /** Anti-join `df` against the tombstone log on doc_id — the lazy-
-    * deletion read guard. Skips the join when no log exists (the gate
-    * fixture path: q136's artifact never carries tombstones). */
-  private def minusTombstones(df: DataFrame, s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.minusIdLog(df, s, s"$path/tombstones", "doc_id")
-
-  /** The PENDING-forget log: takedowns that arrived BEFORE their id's
-    * first admit (r17 advice #5 — [[mediaForgetStream]] and
-    * [[mediaIngestStream]] are independent streams with no cross-stream
-    * ordering, so a forget delivered early used to be silently lost and
-    * the later ingest admitted the id). The merge consults it: a pending
-    * id's first arrival is REFUSED and the id moves to the tombstone log
-    * (the forget is now delivered, and tombstone permanence makes the
-    * refusal replay-safe — a replayed ingest of that batch cannot admit
-    * it). An id that never arrives stays pending with zero effect; fresh
-    * CONTENT under a fresh id still admits (dedup-forget, not a content
-    * ban). */
-  private[graft] def pendingForgetsOf(s: SparkSession, path: String): DataFrame =
-    IndexLifecycle.idLogOf(s, s"$path/pending", "doc_id")
-
   /** Takedown: append the present-and-not-yet-logged request ids to the
-    * tombstone log; ids NOT yet in the index land in the pending-forget
-    * log instead of being dropped (consumed by the id's first arrival —
-    * [[pendingForgetsOf]]). Idempotent at both artifacts (re-delivery
-    * appends nothing); returns the newly-tombstoned count. */
+    * tombstone log; ids NOT yet in the index land in the PENDING-forget
+    * log instead of being dropped (r17 advice #5 — [[mediaForgetStream]]
+    * and [[mediaIngestStream]] are independent streams with no
+    * cross-stream ordering). The merge consults it: a pending id's first
+    * arrival is REFUSED and the id moves to the tombstone log, which
+    * makes the refusal replay-safe; fresh CONTENT under a fresh id still
+    * admits (dedup-forget, not a content ban). Idempotent at both
+    * artifacts (re-delivery appends nothing); returns the newly-
+    * tombstoned count. */
   def forgetMediaFromIndex(requests: DataFrame, path: String): Long =
-    withMediaIndexWriter(requests.sparkSession, path) {
-      val s = requests.sparkSession
-      // ONE checkpointed pass marks each request present/absent (the
-      // lineage reads $path/tombstones and $path/pending, which the
-      // appends below write — localCheckpoint breaks the cycles; a
-      // single eager checkpoint instead of two keeps the takedown path
-      // at its pre-pending-log job count)
-      val marked = requests.select(col("doc_id").cast("long")).distinct()
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"), Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.hintedIdLog(s, s"$path/pending", "doc_id"), Seq("doc_id"), "left_anti")
-        .join(IndexLifecycle.readStamped(s, s"${mediaLiveRoot(s, path)}/vecs")
-            .select(col("doc_id"), lit(1).as("present")),
-          Seq("doc_id"), "left")
-        .localCheckpoint()
-      val present = marked.filter(col("present").isNotNull).select("doc_id")
-      val early = marked.filter(col("present").isNull).select("doc_id")
-      // tombstone and pending tails are INDEPENDENT legs (guide §2.6,
-      // r21): both derive from the checkpointed `marked` frame — overlap
-      // them; the tombstone leg keeps the calling thread (it can
-      // re-enter the writer gate through compaction)
-      val (n, _) = Par.run2(
-        {
-          val n0 = present.count()
-          if (n0 > 0)
-            present.write.mode("append").parquet(s"$path/tombstones")
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactMediaIndex(s, path)
-          n0
-        },
-        if (!early.isEmpty) early.write.mode("append").parquet(s"$path/pending"))
-      n
-    }
+    Media.forget(requests, path)((_, _) => ())(
+      maybeCompactMediaIndex(requests.sparkSession, path))
 
   /** The media MAINTENANCE POLICY's tombstone leg (r19): compact when
     * live victims reach `spark.graft.mediaCompactTombstoneFrac` (default
@@ -2113,23 +2011,17 @@ object MediaOps {
     * vecs, only when a tombstone log exists; the q137 gate row's 1/7 ≈
     * 14% victims sit under the default, so its explicit compact call and
     * oracle are unchanged. */
-  private def maybeCompactMediaIndex(s: SparkSession, path: String): Unit = {
-    val root = mediaLiveRoot(s, path)
-    if (IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/vecs").select("doc_id"),
-        s"$path/tombstones", "doc_id", "spark.graft.mediaCompactTombstoneFrac",
-        memoKey = root))
-      compactMediaIndex(s, path)
-  }
+  private def maybeCompactMediaIndex(s: SparkSession, path: String): Unit =
+    Media.maintain(s, path)(compactMediaIndex(s, path))
 
   /** Scheduled compaction, VERSIONED (r18): rewrites vecs/bands minus
     * the tombstoned ids — defragmenting the ingest appends along the
     * way — and RE-PRICES the band dial against the compacted population
     * when it has GROWN past `priced_n` (VERDICT r17 #1; volume is
     * monotone in population, so a forget-only compaction keeps the
-    * stored width). The rewrite lands in a fresh `$path/versions/v%05d`
-    * directory committed by the atomic `_COMMITTED` marker (the
-    * [[Similarity.rebuildAnnIndex]] discipline): a probe that resolved
+    * stored width). The rewrite lands in a fresh version directory
+    * committed by the atomic `_COMMITTED` marker
+    * ([[StandingIndex.compact]]): a probe that resolved
     * pre-commit keeps reading the old version's files end-to-end — the
     * in-place overwrite this replaces could yank files out from under a
     * concurrent reader — and the fresh directory removes the read-write
@@ -2142,62 +2034,41 @@ object MediaOps {
     * Amortization: one corpus copy per population doubling sums
     * geometrically to ≈ 2× the final corpus — the LSM bargain. */
   def compactMediaIndex(s: SparkSession, path: String): Unit =
-    withMediaIndexWriter(s, path) {
+    Media.compact(s, path) { (root, victims) =>
       import s.implicits._
-      val root = mediaLiveRoot(s, path)
       val st = IndexLifecycle.readStamped(s, s"$root/stat")
         .select("width", "bands_per_doc", "priced_n").head()
       val (w0, bpd, pricedN) = (st.getInt(0), st.getInt(1), st.getLong(2))
-      val live = IndexLifecycle.readStamped(s, s"$root/vecs")
-      val victims =
-        if (ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          live.join(IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "doc_id"),
-            Seq("doc_id"), "left_semi").count()
-        else 0L
-      val pop = live.count() - victims
-      if (victims > 0 || pop > pricedN) {
-        val vecs = minusTombstones(live, s, path)
-        val bands = minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
-        val newRoot = s"$path/versions/${Similarity.nextVersionName(s, path)}"
+      val pop = IndexLifecycle.readStamped(s, s"$root/vecs").count() - victims
+      Option.when(victims > 0 || pop > pricedN) { newRoot =>
+        val bands = Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/bands"), s, path)
         val width2 = if (pop > pricedN) adaptiveBandWidth(bands, bpd) else w0
         // the three writes land in an UNCOMMITTED version directory —
-        // invisible until the _COMMITTED marker below — so their order
-        // is free: overlap them (guide §2.6, r21)
+        // invisible until the _COMMITTED marker — so their order is
+        // free: overlap them (guide §2.6, r21)
         Par.run3(
           Seq((width2, bpd, pop)).toDF("width", "bands_per_doc", "priced_n")
             .write.mode("overwrite").parquet(s"$newRoot/stat"),
-          vecs.write.mode("overwrite").parquet(s"$newRoot/vecs"),
-          bands.write.mode("overwrite").parquet(s"$newRoot/bands"))
-        // atomic commit + keep-N GC (VERDICT r18 #3, shared tail):
-        // growth-triggered compactions under a sustained ingest stream
-        // must not accumulate versions × corpus on disk unattended
-        IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("vecs", "bands", "stat"))
+          Media.minusTombstones(IndexLifecycle.readStamped(s, s"$root/vecs"), s, path)
+            .write.mode("overwrite").parquet(s"$newRoot/vecs"),
+          bands.write.mode("overwrite").parquet(s"$newRoot/bands")): Unit
       }
-    }
-
-  /** Keep-N version GC at media grain — [[Similarity]]'s prune over this
-    * family's flat artifacts (the root logs are never touched: the
-    * tombstones are the audit trail and the merge-side replay guard). */
-  def pruneMediaIndexVersions(s: SparkSession, path: String, keep: Int = 2): Long =
-    withMediaIndexWriter(s, path) {
-      Similarity.pruneVersions(s, path, keep, Seq("vecs", "bands", "stat"))
     }
 
   /** The q137 gate row: lazy build → forget the doc_id % 7 = 3 victims
     * → compact → certify BOTH post-delete artifacts against the log. */
   def mediaIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = mediaIndexScratch("q137", d)
-    if (!mediaIndexExists(s, path))
+    if (!Media.exists(s, path))
       buildMediaIndex(s, d, path)
     forgetMediaFromIndex(
-      IndexLifecycle.readStamped(s, s"${mediaLiveRoot(s, path)}/vecs")
+      IndexLifecycle.readStamped(s, s"${IndexLifecycle.resolveIndexRoot(s, path)}/vecs")
         .select("doc_id").filter("doc_id % 7 = 3"), path)
     compactMediaIndex(s, path)
-    val root = mediaLiveRoot(s, path) // post-compact: the new version
+    val root = IndexLifecycle.resolveIndexRoot(s, path) // post-compact: the new version
     IndexLifecycle.readStamped(s, s"$root/vecs").agg(count(lit(1)).as("n_kept"))
       .crossJoin(IndexLifecycle.readStamped(s, s"$root/bands").agg(count(lit(1)).as("n_kept_bands")))
-      .crossJoin(tombstonesOf(s, path).agg(count(lit(1)).as("n_tombstones")))
+      .crossJoin(Media.tombstones(s, path).agg(count(lit(1)).as("n_tombstones")))
   }
 
   val mediaIndexForgetSql: String =
@@ -2410,7 +2281,7 @@ object MediaOps {
     "q117_crossmodal"    -> ((s, d) => crossModalAudit(s, d)),
     "q136_media_index_probe" -> ((s, d) => {
       val path = mediaIndexPathFor(d)
-      if (!mediaIndexExists(s, path))
+      if (!Media.exists(s, path))
         buildMediaIndex(s, d, path)
       mediaIndexProbeStored(s, d, path)
     }),
@@ -2421,7 +2292,7 @@ object MediaOps {
     "q137_media_index_forget" -> ((s, d) => mediaIndexForget(s, d)),
     "q138_audio_index_probe" -> ((s, d) => {
       val path = mediaIndexScratch("q138", d)
-      if (!mediaIndexExists(s, path))
+      if (!Media.exists(s, path))
         buildAudioIndex(s, d, path)
       audioIndexProbeStored(s, d, path)
     }),
@@ -2432,7 +2303,7 @@ object MediaOps {
     }),
     "q139_video_index_probe" -> ((s, d) => {
       val path = mediaIndexScratch("q139", d)
-      if (!mediaIndexExists(s, path))
+      if (!Media.exists(s, path))
         buildVideoIndex(s, d, path)
       videoIndexProbeStored(s, d, path)
     }),

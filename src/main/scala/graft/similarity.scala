@@ -4052,12 +4052,12 @@ object Similarity {
     * flight never mixes versions within one probe. */
   private[graft] def probeAnnIndex(delta: DataFrame, path0: String): DataFrame = {
     val s = delta.sparkSession
-    val path = resolveIndexRoot(s, path0)
+    val root = IndexLifecycle.resolveIndexRoot(s, path0)
     annProbe(delta,
-      IndexLifecycle.readStamped(s, s"$path/centroids"),
+      IndexLifecycle.readStamped(s, s"$root/centroids"),
       // live rows only: deletion is lazy (r19) — a forgotten vector must
       // never surface as a neighbour before compaction makes it physical
-      liveAssignments(s, path))
+      liveAssignments(s, path0, root))
   }
 
   /** The same probe over in-memory frames (no artifact) — the spec pins
@@ -4146,99 +4146,22 @@ object Similarity {
   private[graft] def mergeIndexPathFor(d: String): String =
     graft.ScratchPaths.indexPathFor(s"q134-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
 
-  /** Writers against one standing-index path are read-modify-write
-    * overwrites of the same artifact: a merge that reads assignments
-    * before a concurrent forget commits and writes after it would
-    * resurrect the deleted vectors (and vice versa). The critical
-    * sections are serialized per path within the JVM — sufficient for
-    * the local[*] execution model where every writer (batch gate rows,
-    * annIngestStream/forgetStream foreachBatch sinks) shares the
-    * driver process. MULTI-DRIVER deployments must enforce
-    * single-writer-per-path externally (one ingestion owner per index
-    * artifact — the same contract every non-transactional parquet
-    * layout carries); readers are unaffected either way (r16 advice). */
-  private def withIndexWriteLock[T](path: String)(body: => T): T =
-    graft.IndexLifecycle.withLock(path)(body)
-  /** JVM lock + cross-driver write-intent marker (VERDICT r17 #5) — every
-    * artifact writer enters through here ([[graft.IndexLifecycle]], the
-    * r19 shared lifecycle core). */
-  private def withIndexWriter[T](s: SparkSession, path: String)(body: => T): T =
-    graft.IndexLifecycle.withWriter(s, path)(body)
-
-  // ---------------------------------------------------------------------
-  // VERSIONED INDEX ROOTS (r18, VERDICT r17 #3): [[rebuildAnnIndex]]
-  // writes each refit to a fresh `$path/versions/v%05d` directory and
-  // commits it by CREATING a `_COMMITTED` marker — readers resolve the
-  // highest committed version. Marker-create is atomic on every Hadoop
-  // FileSystem including object stores (an atomic rename-OVERWRITE of a
-  // manifest file is not), in-flight probes that resolved before the
-  // commit keep reading the old version's files (which are never
-  // touched), and the old version is retained for exactly that reason.
-  // A path with no committed version is the legacy flat layout (the
-  // build's artifacts at the root — implicitly version 1).
-  // ---------------------------------------------------------------------
-
-  private[graft] def hadoopFs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** The CURRENT artifact root of a (possibly versioned) index — every
-    * q119-family reader and incremental writer resolves through here. */
-  private[graft] def resolveIndexRoot(s: SparkSession, path: String): String = {
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    if (!fs.exists(vdir)) path
-    else {
-      val committed = fs.listStatus(vdir).iterator
-        .map(_.getPath.getName)
-        .filter(n => n.startsWith("v") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED")))
-        .toSeq
-      if (committed.isEmpty) path else s"$path/versions/${committed.max}"
-    }
-  }
-
-  /** The takedown tombstone log of a RESOLVED version root — empty frame
-    * when the log does not exist (the gate fixture path). */
-  private[graft] def annTombstonesOf(s: SparkSession, root: String): DataFrame =
-    graft.IndexLifecycle.idLogOf(s, s"$root/tombstones", "vec_id")
-
-  /** Anti-join `df` against the version root's tombstone log on vec_id —
-    * LAZY DELETION (r19, VERDICT r18 #2): [[forgetVictimIdsFrom]] no
-    * longer rewrites live cells in place (a concurrent probe whose plan
-    * listed files pre-overwrite could have them yanked mid-read); it
-    * only appends to the log, EVERY reader subtracts it here, and the
-    * versioned rebuild makes deletion physical. Skipped when no log
-    * exists, so the untouched-index read path pays nothing. */
-  private[graft] def minusAnnTombstones(df: DataFrame, s: SparkSession,
-                                        root: String): DataFrame =
-    graft.IndexLifecycle.minusIdLog(df, s, s"$root/tombstones", "vec_id")
+  /** The ANN and IVF-PQ lifecycle descriptors ([[StandingIndex]]): writer
+    * gate, live root, root-level id logs, forget, maintenance and
+    * versioned commit. Writers against one standing-index path are
+    * serialized per path within the JVM; MULTI-DRIVER deployments keep
+    * the single-writer-per-path contract (the write-intent marker) —
+    * readers are unaffected either way (r16 advice). */
+  private val Ann = StandingIndex.Ann
+  private val Pq = StandingIndex.Pq
 
   /** The LIVE rows of a resolved version root's assignments — the stored
-    * artifact minus the tombstone log. */
-  private[graft] def liveAssignments(s: SparkSession, root: String): DataFrame =
-    minusAnnTombstones(IndexLifecycle.readStamped(s, s"$root/assignments"), s, root)
-
-  /** Lazy-build gate: an index exists when its flat artifacts are present
-    * OR any committed version does — keep-N GC retires the flat root once
-    * the version window fills (r19), so keying "built" on the flat
-    * `_SUCCESS` alone would silently rebuild a live versioned index. */
-  private[graft] def annIndexExists(s: SparkSession, path: String): Boolean =
-    graft.ScratchPaths.artifactExists(s, s"$path/assignments/_SUCCESS") ||
-      resolveIndexRoot(s, path) != path
-
-  /** Next version directory name: one past the highest present (committed
-    * OR in-flight — a crashed rebuild's uncommitted directory is never
-    * reused). The flat root counts as version 1. */
-  private[graft] def nextVersionName(s: SparkSession, path: String): String = {
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    val highest =
-      if (!fs.exists(vdir)) 1
-      else fs.listStatus(vdir).iterator.map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).map(_.drop(1).toInt).foldLeft(1)(math.max)
-    f"v${highest + 1}%05d"
-  }
+    * artifact minus the path-root tombstone log (deletion is LAZY, r19:
+    * a takedown only appends to the log, every reader subtracts it here,
+    * and the versioned rebuild makes it physical). */
+  private[graft] def liveAssignments(s: SparkSession, path: String,
+                                     root: String): DataFrame =
+    Ann.minusTombstones(IndexLifecycle.readStamped(s, s"$root/assignments"), s, path)
 
   /** The q134 fold for ONE (vec_id, embedding) delta frame — shared by
     * the batch gate row and the streaming ingestion sink
@@ -4252,46 +4175,19 @@ object Similarity {
     * the forget path just enforced (the reference's transport replays
     * from the beginning on restart, `Consumer/kafkaConsumer.js:53`). */
   private[graft] def mergeDeltaIntoIndex(delta: DataFrame, path0: String): Unit =
-      withIndexWriter(delta.sparkSession, path0) {
+      Ann.writer(delta.sparkSession, path0) {
     val s = delta.sparkSession
-    val path = resolveIndexRoot(s, path0) // fold into the LIVE version
+    val path = IndexLifecycle.resolveIndexRoot(s, path0) // fold into the LIVE version
     val assignments = IndexLifecycle.readStamped(s, s"$path/assignments")
-    val deduped = delta.dropDuplicates("vec_id")
     // at-least-once sources can repeat a vec_id WITHIN one micro-batch;
     // without dropDuplicates the copies all pass the stored-index
     // anti-join below and insert duplicate rows (r15 advice)
-    //
+    val deduped = delta.dropDuplicates("vec_id")
     // pending-forget consult (r19c — the media q137 ordering at vector
-    // grain): a takedown that arrived BEFORE this id's first admit is
-    // delivered now — the arrival is refused via a permanent tombstone
-    // (null cell: the row was never stored) and the pending entry is
-    // consumed; replays of this batch can never admit it
-    if (graft.ScratchPaths.artifactExists(s, s"$path0/pending/_SUCCESS")) {
-      // log sides via the size-gated hint (r20): both logs are corpus-
-      // fraction-bounded, not request-bounded — see IndexLifecycle
-      val delivered = deduped.select("vec_id")
-        .join(graft.IndexLifecycle.hintedIdLog(s, s"$path0/pending", "vec_id"),
-          Seq("vec_id"), "left_semi")
-        .localCheckpoint()
-      if (!delivered.isEmpty) {
-        val labelNull = assignments.schema("c_label").dataType.sql
-        val novel = delivered
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-            Seq("vec_id"), "left_anti")
-          .selectExpr("vec_id", s"cast(null as $labelNull) as c_label")
-          .localCheckpoint()
-        if (!novel.isEmpty) {
-          if (graft.ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-            novel.write.mode("append").parquet(s"$path/tombstones")
-          else novel.write.mode("overwrite").parquet(s"$path/tombstones")
-        }
-        // r20: a consume that empties the log DELETES the directory —
-        // no future merge pays a dead existence check for it
-        graft.IndexLifecycle.consumeIdLog(s, s"$path0/pending", "vec_id",
-          delivered)
-      }
-    }
-    val admitted = minusAnnTombstones(deduped, s, path)
+    // grain): an early takedown is refused here via a permanent
+    // tombstone (null cell: the row was never stored)
+    Ann.consultPending(s, path0, path, deduped)
+    val admitted = Ann.minusTombstones(deduped, s, path0)
     val routed = routeAnnDelta(admitted,
       IndexLifecycle.readStamped(s, s"$path/centroids"))
     val labelT = assignments.schema("label").dataType.sql
@@ -4323,11 +4219,11 @@ object Similarity {
   }
 
   def mergeAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
-    if (!annIndexExists(s, path))
+    if (!Ann.exists(s, path))
       buildAnnIndex(s, d, path)
     mergeDeltaIntoIndex(annDelta(s, d), path)
     // the report reads the POST-merge LIVE rows — idempotent across runs
-    liveAssignments(s, resolveIndexRoot(s, path))
+    liveAssignments(s, path, IndexLifecycle.resolveIndexRoot(s, path))
       .groupBy("c_label")
       .agg(count(lit(1)).as("nt"),
         count(when(col("vec_id") >= 100000L, 1)).as("na"))
@@ -4344,7 +4240,7 @@ object Similarity {
   // Deletion is LAZY (VERDICT r18 #2): the takedown locates the victims'
   // cells (one id-pushdown scan of the artifact — the audit log records
   // (vec_id, c_label) as stored) and APPENDS them to the tombstone log;
-  // every reader subtracts the log ([[minusAnnTombstones]] — effective
+  // every reader subtracts the log ([[liveAssignments]] — effective
   // immediately), and the versioned [[rebuildAnnIndex]] makes deletion
   // physical. No stored file is ever rewritten or deleted, so no
   // reader's planned file listing can be invalidated — the in-place
@@ -4377,74 +4273,9 @@ object Similarity {
     * The tombstone append IS the whole takedown (r19 — lazy deletion):
     * nothing is rewritten here, every reader subtracts the log, and the
     * versioned [[rebuildAnnIndex]] makes the deletion physical. */
-  private[graft] def forgetVictimIdsFrom(victimIds: DataFrame, path0: String): Unit =
-      withIndexWriter(victimIds.sparkSession, path0) {
-    val s = victimIds.sparkSession
-    val path = resolveIndexRoot(s, path0) // delete from the LIVE version
-    val assignments = IndexLifecycle.readStamped(s, s"$path/assignments")
-    // locate: the stored artifact's cells are the truth for the audit log
-    val located = assignments
-      .join(broadcast(victimIds.select("vec_id").dropDuplicates("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .select("vec_id", "c_label")
-      .localCheckpoint() // the log append below feeds this frame's readers
-    val tombPath = s"$path/tombstones"
-    val tombstonesExist = graft.ScratchPaths.artifactExists(s, s"$tombPath/_SUCCESS")
-    // NO physical rewrite (r19, VERDICT r18 #2): deletion is LAZY — the
-    // tombstone append is the whole takedown, every reader subtracts
-    // the log ([[minusAnnTombstones]], one broadcast anti-join per read
-    // — effective immediately), and the versioned [[rebuildAnnIndex]]
-    // makes it physical. An append-only log cannot invalidate any
-    // reader's file listing.
-    //
-    // The tombstone and pending tails are INDEPENDENT legs (guide §2.6,
-    // r21): every id the tombstone leg appends is in `located`, which
-    // the pending leg anti-joins away regardless of whether its log
-    // scan lists the pre- or post-append files (parquet commits by
-    // atomic rename — a concurrent listing only ever sees whole files).
-    // The tombstone leg keeps the calling thread (it can re-enter the
-    // writer gate through the compaction tail).
-    Par.run2(
-      {
-        if (!tombstonesExist) {
-          // first write creates the log (schema even when the request
-          // located nothing — the report's left join needs a readable
-          // frame)
-          located.write.mode("overwrite").parquet(tombPath)
-        } else {
-          val newTombs = located
-            .join(IndexLifecycle.readStamped(s, tombPath).select("vec_id"), Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-          if (!newTombs.isEmpty)
-            newTombs.write.mode("append").parquet(tombPath)
-        }
-        // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-        // r19 gate on novel appends left a crash window — tombstones land,
-        // the driver dies before the check, and the at-least-once replay
-        // appends nothing, so the check never ran and an above-threshold
-        // victim mass sat on the read path until the next NOVEL takedown.
-        // The r20 amortization is what makes the unconditional call
-        // affordable: below the bound it costs zero Spark jobs (existence
-        // guard + footer-stamped log count, both driver-side).
-        maybeCompactAnnIndex(s, path0, path)
-      },
-      {
-        // PENDING-FORGET (r19c — the media q137 ordering at vector grain):
-        // a takedown racing ahead of its id's first arrival must pend, not
-        // silently drop — the transport can reorder the forget and ingest
-        // streams. Consumed by [[mergeDeltaIntoIndex]]; the log lives at the
-        // PATH ROOT (it must survive version swaps without a carry).
-        val early = victimIds.select("vec_id").dropDuplicates("vec_id")
-          .join(broadcast(located.select("vec_id")), Seq("vec_id"), "left_anti")
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-            Seq("vec_id"), "left_anti")
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path0/pending", "vec_id"),
-            Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-        if (!early.isEmpty)
-          early.write.mode("append").parquet(s"$path0/pending")
-      }): Unit
-  }
+  private[graft] def forgetVictimIdsFrom(victimIds: DataFrame, path: String): Unit =
+    Ann.forget(victimIds, path)((_, _) => ())(
+      maybeCompactAnnIndex(victimIds.sparkSession, path)): Unit
 
   /** The ANN MAINTENANCE POLICY's tombstone leg (r19): when the live
     * victims lazy deletion is hiding reach
@@ -4453,48 +4284,40 @@ object Similarity {
     * codebook and drift reference frame carried, victims removed
     * physically, LSM appends defragmented, in a fresh committed version.
     * The DRIFT-gated auto-refit (r18) handles routing decay; this leg
-    * handles deletion mass — together the index is fully self-
-    * maintaining under unattended streams. Check cost: one narrow
-    * (vec_id) artifact scan, only when a tombstone log exists; the q135
-    * gate row's 1/50 = 2% victims sit far under the default, so its
-    * plan and oracle are unchanged. */
-  private def maybeCompactAnnIndex(s: SparkSession, path0: String,
-                                   root: String): Unit = {
-    if (!graft.ScratchPaths.artifactExists(s, s"$root/tombstones/_SUCCESS"))
-      return
-    // no codebook, no compaction: the rounds = 0 path carries the stored
-    // centroids, so a bare assignments artifact (possible mid-build, or
-    // in a hand-assembled fixture) stays on lazy deletion alone
-    if (!graft.ScratchPaths.artifactExists(s, s"$root/centroids/_SUCCESS"))
-      return
-    if (graft.IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/assignments").select("vec_id"),
-        s"$root/tombstones", "vec_id", "spark.graft.annCompactTombstoneFrac",
-        memoKey = root))
-      // the INDEX path, not the resolved root — the rebuild allocates
-      // its own version directory under $path0/versions
-      rebuildAnnIndex(s, path0, rounds = 0): Unit
-  }
+    * handles deletion mass. The q135 gate row's 1/50 = 2% victims sit
+    * far under the default, so its plan and oracle are unchanged. */
+  private def maybeCompactAnnIndex(s: SparkSession, path: String): Unit =
+    Ann.maintain(s, path) {
+      // no codebook, no compaction: the rounds = 0 path carries the
+      // stored centroids, so a bare assignments artifact (possible
+      // mid-build, or in a hand-assembled fixture) stays on lazy
+      // deletion alone
+      if (ScratchPaths.artifactExists(s,
+          s"${IndexLifecycle.resolveIndexRoot(s, path)}/centroids/_SUCCESS"))
+        rebuildAnnIndex(s, path, rounds = 0): Unit
+    }
 
   def forgetFromAnnIndex(s: SparkSession, d: String, path: String): DataFrame = {
-    if (!annIndexExists(s, path))
+    if (!Ann.exists(s, path))
       buildAnnIndex(s, d, path)
     // the takedown request: every 50th item (request-sized, broadcast) —
     // drawn from the LIVE version (the flat root may be GC-retired)
     forgetVictimIdsFrom(
-      IndexLifecycle.readStamped(s, s"${resolveIndexRoot(s, path)}/assignments")
+      IndexLifecycle.readStamped(s, s"${IndexLifecycle.resolveIndexRoot(s, path)}/assignments")
         .filter(pmod(col("vec_id"), lit(50)) === 0).select("vec_id"),
       path)
     // POST-delete LIVE counts (stored minus tombstones — deletion is
-    // lazy, r19) joined to the tombstone log — both fixed points under
-    // re-execution
-    val root = resolveIndexRoot(s, path)
-    liveAssignments(s, root)
+    // lazy, r19) joined to the tombstone log's audit cells — both fixed
+    // points under re-execution
+    val kept = liveAssignments(s, path, IndexLifecycle.resolveIndexRoot(s, path))
       .groupBy("c_label").agg(count(lit(1)).as("n_kept"))
-      .join(
-        IndexLifecycle.readStamped(s, s"$root/tombstones")
-          .groupBy("c_label").agg(count(lit(1)).as("n_deleted")),
-        Seq("c_label"), "left")
+    val deleted =
+      if (ScratchPaths.artifactExists(s, s"${Ann.tombstonesDir(path)}/_SUCCESS"))
+        kept.join(IndexLifecycle.readStamped(s, Ann.tombstonesDir(path))
+            .groupBy("c_label").agg(count(lit(1)).as("n_deleted")),
+          Seq("c_label"), "left")
+      else kept.withColumn("n_deleted", lit(null).cast("long"))
+    deleted
       .selectExpr("c_label", "cast(n_kept as bigint) as n_kept",
         "cast(coalesce(n_deleted, 0) as bigint) as n_deleted")
       .orderBy("c_label")
@@ -4583,12 +4406,12 @@ object Similarity {
   // CURRENT population (Lloyd rounds in cosine space, SEEDED by the
   // stored partition — round 1's centroid update runs over the stored
   // cells, exactly one-step-of-q84 semantics per round), re-route every
-  // row, and write the result as a NEW VERSION under `$path/versions/`,
-  // committed by an atomic marker-create ([[resolveIndexRoot]]). Probes
+  // row, and write the result as a NEW committed VERSION
+  // ([[StandingIndex.refit]], an atomic marker-create). Probes
   // resolve the version once at plan time, so a probe in flight during
   // the swap reads the OLD version's files end-to-end (never touched,
-  // never deleted); the tombstone log rides along so the merge-side
-  // replay guard survives the swap.
+  // never deleted); the tombstone log lives at the path root, so the
+  // merge-side replay guard needs no carry across the swap.
   //
   // Scale shape (100 TB): each Lloyd round is ONE partial aggregate whose
   // shuffle carries k decimal-sum buffers per map task (k·dim, never the
@@ -4631,12 +4454,6 @@ object Similarity {
         "cast(-best.nl as int) as c_label")
   }
 
-  /** Keep-N window for [[pruneVersions]] — configurable per session;
-    * default live + one committed predecessor (in-flight pre-swap
-    * readers, rollback, and the q140 rebuild report all need it). */
-  private[graft] def keepVersions(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.indexKeepVersions").map(_.toInt).getOrElse(2)
-
   /** The refit: `rounds` Lloyd rounds (update-then-assign) over the LIVE
     * version's population (minus the tombstone log — the rebuild is the
     * compaction that makes lazy deletion physical, r19), written as a
@@ -4665,51 +4482,36 @@ object Similarity {
   def rebuildAnnIndex(s: SparkSession, path: String, rounds: Int = 2,
                       beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
-    // version-name allocation is the only phase-1 step needing the lock —
-    // and the directory is CREATED inside it: [[nextVersionName]] counts
-    // in-flight directories, so without the mkdirs a second rebuild
-    // started during this one's (long, lockless) refit phase would be
-    // handed the same name and the two would write into one directory
-    val (root, newRoot) = withIndexWriteLock(path) {
-      val nr = s"$path/versions/${nextVersionName(s, path)}"
-      hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
-      (resolveIndexRoot(s, path), nr)
-    }
-    var asg = liveAssignments(s, root)
-      .selectExpr("vec_id", "label", "embedding", "nrm", "c_label",
-        "c_label as c0")
-      .transform(Tables.maybePersist)
-    // rounds = 0 is PURE COMPACTION (r19, the tombstone-mass maintenance
-    // leg): the stored codebook is kept, no row changes cell — the write
-    // below just makes lazy deletion physical and defragments the LSM
-    // appends. rounds > 0 is the refit proper.
-    var cents: DataFrame =
-      if (rounds == 0) IndexLifecycle.readStamped(s, s"$root/centroids") else null
-    for (_ <- 1 to rounds) {
-      cents = cellMeans(asg).transform(Tables.maybePersist)
-      asg = reassignCells(asg, cents)
-    }
-    // both phase-1 writes land in the UNCOMMITTED version directory —
-    // order free until the _COMMITTED marker: overlap them (§2.6, r21)
-    Par.run2(
-      asg.selectExpr("vec_id", "label", "embedding", "nrm", "c_label")
-        .write.mode("overwrite").partitionBy("c_label")
-        .parquet(s"$newRoot/assignments"),
-      cents.write.mode("overwrite").parquet(s"$newRoot/centroids"))
-    beforeCatchup()
-    withIndexWriter(s, path) {
-      // the tombstone log rides along AS OF NOW (not the phase-1 read):
-      // it is the merge-side replay guard, and a takedown that landed
-      // during the refit must survive the swap — its victim is physically
-      // present in the refit output and stays hidden by the carried log
-      // until the NEXT rebuild removes it
-      if (graft.ScratchPaths.artifactExists(s, s"$root/tombstones/_SUCCESS"))
-        IndexLifecycle.readStamped(s, s"$root/tombstones").localCheckpoint()
-          .write.mode("overwrite").parquet(s"$newRoot/tombstones")
+    Ann.refit(s, path, beforeCatchup) { (root, newRoot) =>
+      var asg = liveAssignments(s, path, root)
+        .selectExpr("vec_id", "label", "embedding", "nrm", "c_label",
+          "c_label as c0")
+        .transform(Tables.maybePersist)
+      // rounds = 0 is PURE COMPACTION (r19, the tombstone-mass maintenance
+      // leg): the stored codebook is kept, no row changes cell — the write
+      // below just makes lazy deletion physical and defragments the LSM
+      // appends. rounds > 0 is the refit proper.
+      var cents: DataFrame =
+        if (rounds == 0) IndexLifecycle.readStamped(s, s"$root/centroids") else null
+      for (_ <- 1 to rounds) {
+        cents = cellMeans(asg).transform(Tables.maybePersist)
+        asg = reassignCells(asg, cents)
+      }
+      // both phase-1 writes land in the UNCOMMITTED version directory —
+      // order free until the _COMMITTED marker: overlap them (§2.6, r21)
+      Par.run2(
+        asg.selectExpr("vec_id", "label", "embedding", "nrm", "c_label")
+          .write.mode("overwrite").partitionBy("c_label")
+          .parquet(s"$newRoot/assignments"),
+        cents.write.mode("overwrite").parquet(s"$newRoot/centroids")): Unit
+    } { (root, newRoot, _) =>
       // catchup: live rows that merged into the OLD version mid-refit
       // (fresh file listing — the LSM merge appends files, so a fresh
-      // read sees them) and are absent from the refit output
-      val missed = liveAssignments(s, root)
+      // read sees them) and are absent from the refit output. A takedown
+      // that landed mid-refit needs no carry: its victim is physically
+      // present in the refit output and stays hidden by the path-root
+      // log until the NEXT rebuild removes it
+      val missed = liveAssignments(s, path, root)
         .join(IndexLifecycle.readStamped(s, s"$newRoot/assignments").select("vec_id"),
           Seq("vec_id"), "left_anti")
         .selectExpr("vec_id", "label", "embedding", "nrm", "c_label as c0")
@@ -4719,104 +4521,20 @@ object Similarity {
           .selectExpr("vec_id", "label", "embedding", "nrm", "c_label")
           .write.mode("append").partitionBy("c_label")
           .parquet(s"$newRoot/assignments")
-      // a REFIT's population (caught-up rows included, carried tombstones
-      // excluded) is the new drift reference frame; a PURE COMPACTION
-      // (rounds = 0) carries the OLD frame forward — resetting cellstat
-      // to the current population would zero the measured drift without
-      // refitting, silently suppressing the drift-gated auto-refit under
-      // frequent tombstone-triggered compactions
+      // a REFIT's live population (caught-up rows included) is the new
+      // drift reference frame; a PURE COMPACTION (rounds = 0) carries the
+      // OLD frame forward — resetting cellstat to the current population
+      // would zero the measured drift without refitting, silently
+      // suppressing the drift-gated auto-refit under frequent
+      // tombstone-triggered compactions
       if (rounds == 0 &&
-          graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
+          ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
         IndexLifecycle.readStamped(s, s"$root/cellstat")
           .write.mode("overwrite").parquet(s"$newRoot/cellstat")
       else
-        liveAssignments(s, newRoot)
+        liveAssignments(s, path, newRoot)
           .groupBy("c_label").agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$newRoot/cellstat")
-      // atomic commit + keep-N GC (VERDICT r18 #3) — the shared tail:
-      // the old version's files stay for in-flight (and replayed)
-      // readers; an unattended auto-refit stream must not accumulate
-      // versions × corpus on disk
-      graft.IndexLifecycle.commitVersion(s, path, newRoot,
-        Seq("assignments", "centroids", "cellstat"))
-    }
-    newRoot
-  }
-
-  /** The version the live one replaced: the second-newest committed
-    * version, else the flat root (implicit v1) when its artifacts are
-    * still present, else None (predecessor pruned). */
-  private[graft] def previousVersionRoot(s: SparkSession, path: String): Option[String] = {
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    val committed =
-      if (!fs.exists(vdir)) Seq.empty
-      else fs.listStatus(vdir).iterator.map(_.getPath.getName)
-        .filter(n => n.matches("v\\d+") &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED")))
-        .toSeq.sorted.reverse
-    committed.drop(1).headOption.map(n => s"$path/versions/$n")
-      .orElse(
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/assignments/_SUCCESS")))
-          Some(path)
-        else None)
-  }
-
-  /** VERSION GC (r18): every rebuild leaves a full corpus copy — at
-    * production scale old versions must be retired or the index costs
-    * versions × corpus on disk forever. Keeps the LIVE version plus the
-    * `keep − 1` most recent committed predecessors (default: live + one
-    * buffer for in-flight probes that resolved pre-swap and for
-    * rollback); deletes older committed versions, uncommitted
-    * directories OLDER than the live version (crashed rebuilds — an
-    * uncommitted dir NEWER than live may be an in-flight rebuild and is
-    * never touched), and, once `keep` committed versions exist, the
-    * legacy flat artifacts (the implicit v1; its tombstone log is KEPT
-    * — versions carry their own copies, the flat one stays as the audit
-    * trail). Never touches the live version. Returns the number of
-    * retired version roots. */
-  def pruneAnnIndexVersions(s: SparkSession, path: String, keep: Int = 2): Long =
-    withIndexWriter(s, path) {
-      pruneVersions(s, path, keep, Seq("assignments", "centroids", "cellstat"))
-    }
-
-  /** The family-agnostic prune body (the media index shares it with its
-    * own flat-artifact list). Callers hold their writer lock + intent
-    * marker. */
-  private[graft] def pruneVersions(s: SparkSession, path: String, keep: Int,
-                                   flatArtifacts: Seq[String]): Long = {
-    require(keep >= 1, s"keep must be >= 1: $keep")
-    val fs = hadoopFs(s, path)
-    val vdir = new org.apache.hadoop.fs.Path(s"$path/versions")
-    if (!fs.exists(vdir)) 0L
-    else {
-      val all = fs.listStatus(vdir).iterator.map(_.getPath.getName)
-        .filter(_.matches("v\\d+")).toSeq
-      val committed = all.filter(n =>
-        fs.exists(new org.apache.hadoop.fs.Path(s"$path/versions/$n/_COMMITTED")))
-        .sorted.reverse
-      if (committed.isEmpty) 0L
-      else {
-        val live = committed.head
-        val staleCommitted = committed.drop(keep)
-        val staleCrashed = all.filterNot(committed.contains)
-          .filter(_ < live) // lexicographic == numeric at fixed width
-        var n = 0L
-        (staleCommitted ++ staleCrashed).foreach { v =>
-          if (fs.delete(new org.apache.hadoop.fs.Path(s"$path/versions/$v"), true))
-            n += 1
-        }
-        // the flat root (implicit v1) retires once the keep window is
-        // filled by committed versions
-        if (committed.size >= keep &&
-            fs.exists(new org.apache.hadoop.fs.Path(s"$path/${flatArtifacts.head}"))) {
-          flatArtifacts.foreach { a =>
-            fs.delete(new org.apache.hadoop.fs.Path(s"$path/$a"), true): Unit
-          }
-          n += 1
-        }
-        n
-      }
     }
   }
 
@@ -4825,11 +4543,11 @@ object Similarity {
     * first-rebuild chain): per-cell population and how many rows the
     * refit moved in. Stable across re-runs (nothing is written). */
   private[graft] def rebuildReport(s: SparkSession, path: String): DataFrame = {
-    val live = resolveIndexRoot(s, path)
-    val prev = previousVersionRoot(s, path).getOrElse(
+    val live = IndexLifecycle.resolveIndexRoot(s, path)
+    val prev = Ann.previousRoot(s, path).getOrElse(
       throw new IllegalStateException(
         s"rebuild report for $path needs the predecessor version; it was pruned"))
-    liveAssignments(s, live).select(col("vec_id"), col("c_label"))
+    liveAssignments(s, path, live).select(col("vec_id"), col("c_label"))
       .join(IndexLifecycle.readStamped(s, s"$prev/assignments")
         .select(col("vec_id"), col("c_label").as("c_prev")), Seq("vec_id"))
       .groupBy("c_label")
@@ -4852,16 +4570,16 @@ object Similarity {
     * self-seeds: the current population becomes the reference and the
     * check returns 0 (the standing-statistic discipline). */
   def annIndexDriftPsiMicro(s: SparkSession, path: String): Long = {
-    val root = resolveIndexRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/cellstat/_SUCCESS"))
-      withIndexWriter(s, path) {
-        liveAssignments(s, root)
+      Ann.writer(s, path) {
+        liveAssignments(s, path, root)
           .groupBy("c_label").agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(s"$root/cellstat")
       }
     val ref = IndexLifecycle.readStamped(s, s"$root/cellstat")
       .selectExpr("c_label", "n as n_ref")
-    val cur = liveAssignments(s, root)
+    val cur = liveAssignments(s, path, root)
       .groupBy("c_label").agg(count(lit(1)).as("n_cur"))
     // dense over the codebook's cell list — a cell can be empty in
     // either population and still carries a smoothed term
@@ -4893,10 +4611,10 @@ object Similarity {
     * exact statistic [[maybeRebuildAnnIndex]] acts on. */
   def annIndexDriftReport(s: SparkSession, path: String,
                           psiMicroThreshold: Long = 200000L): DataFrame = {
-    val root = resolveIndexRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     val ref = IndexLifecycle.readStamped(s, s"$root/cellstat")
       .selectExpr("c_label", "n as n_ref")
-    val cur = liveAssignments(s, root)
+    val cur = liveAssignments(s, path, root)
       .groupBy("c_label").agg(count(lit(1)).as("n_cur"))
     val dense = IndexLifecycle.readStamped(s, s"$root/centroids").select("c_label")
       .join(broadcast(ref), Seq("c_label"), "left")
@@ -4929,7 +4647,7 @@ object Similarity {
   def annIndexDriftCheck(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q141-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!annIndexExists(s, path)) {
+    if (!Ann.exists(s, path)) {
       buildAnnIndex(s, d, path)
       mergeDeltaIntoIndex(annDelta(s, d), path)
     }
@@ -5016,11 +4734,11 @@ object Similarity {
     * version short-circuits the rebuild; the report only reads). */
   def annIndexRebuild(s: SparkSession, d: String): DataFrame = {
     val path = refitIndexPathFor(d)
-    if (!annIndexExists(s, path)) {
+    if (!Ann.exists(s, path)) {
       buildAnnIndex(s, d, path)
       mergeDeltaIntoIndex(annDelta(s, d), path)
     }
-    if (resolveIndexRoot(s, path) == path) rebuildAnnIndex(s, path, rounds = 2)
+    if (IndexLifecycle.resolveIndexRoot(s, path) == path) rebuildAnnIndex(s, path, rounds = 2)
     rebuildReport(s, path)
   }
 
@@ -5151,7 +4869,7 @@ object Similarity {
     * fit's own distortion — the reference the distortion-gated
     * auto-refit (r19c) prices decay against. */
   def buildPqIndex(s: SparkSession, d: String, path: String): Long =
-      withIndexWriter(s, path) {
+      Pq.writer(s, path) {
     val rows = coarseRows(s, d) // ONE collect: routing, residuals, artifact
     val corpus = ivfPqResidualCorpusWith(s, d, rows).transform(Tables.maybePersist)
     // the coarse artifact is independent of the fit ladder — overlap the
@@ -5265,23 +4983,11 @@ object Similarity {
   // rewrite, the cheapest corpus pass in the family (m bytes/row).
   // ---------------------------------------------------------------------
 
-  private[graft] def pqLiveRoot(s: SparkSession, path: String): String =
-    resolveIndexRoot(s, path)
-
-  /** Lazy-build gate: flat artifacts present OR any committed version. */
-  private[graft] def pqStoredIndexExists(s: SparkSession, path: String): Boolean =
-    graft.ScratchPaths.artifactExists(s, s"$path/codes/_SUCCESS") ||
-      pqLiveRoot(s, path) != path
-
-  private[graft] def pqTombstonesOf(s: SparkSession, path: String): DataFrame =
-    graft.IndexLifecycle.idLogOf(s, s"$path/tombstones", "vec_id")
-
   /** Live code rows: stored minus the root tombstone log (skipped — plan
     * untouched — when no log exists, so q126's pinned shape holds). */
   private[graft] def livePqCodes(s: SparkSession, path: String,
                                  root: String): DataFrame =
-    graft.IndexLifecycle.minusIdLog(
-      IndexLifecycle.readStamped(s, s"$root/codes"), s, s"$path/tombstones", "vec_id")
+    Pq.minusTombstones(IndexLifecycle.readStamped(s, s"$root/codes"), s, path)
 
   /** Route a raw (vec_id, embedding) batch with the STORED coarse frame
     * and compute its float32 residuals — the encode-side twin of the
@@ -5313,37 +5019,16 @@ object Similarity {
     * (already-encoded ids anti-join away against the codes registry),
     * tombstone-aware. Returns (admitted, refused). */
   def mergePqBatchIntoIndex(batch: DataFrame, path: String): (Long, Long) =
-    withIndexWriter(batch.sparkSession, path) {
+    Pq.writer(batch.sparkSession, path) {
       val s = batch.sparkSession
-      val root = pqLiveRoot(s, path) // appends fold into the LIVE version
+      val root = IndexLifecycle.resolveIndexRoot(s, path) // appends fold into the LIVE version
       val deduped = batch.select(col("vec_id").cast("long"), col("embedding"))
         .dropDuplicates("vec_id")
         .transform(Tables.maybePersist)
-      // pending-forget consult (r19c): an early takedown is delivered
-      // now — arrival refused via a permanent tombstone (null cell: the
-      // row was never stored), pending entry consumed
-      if (graft.ScratchPaths.artifactExists(s, s"$path/pending/_SUCCESS")) {
-        val delivered = deduped.select("vec_id")
-          .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/pending", "vec_id"),
-            Seq("vec_id"), "left_semi")
-          .localCheckpoint()
-        if (!delivered.isEmpty) {
-          val novel = delivered
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-              Seq("vec_id"), "left_anti")
-            .selectExpr("vec_id", "cast(null as int) as c_label")
-            .localCheckpoint()
-          if (!novel.isEmpty)
-            novel.write.mode(
-              if (graft.ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-                "append" else "overwrite")
-              .parquet(s"$path/tombstones")
-          graft.IndexLifecycle.consumeIdLog(s, s"$path/pending", "vec_id",
-            delivered)
-        }
-      }
-      val admitted = graft.IndexLifecycle.minusIdLog(
-        deduped, s, s"$path/tombstones", "vec_id")
+      // pending-forget consult (r19c): an early takedown is refused here
+      // via a permanent tombstone (null cell: the row was never stored)
+      Pq.consultPending(s, path, root, deduped)
+      val admitted = Pq.minusTombstones(deduped, s, path)
       // localCheckpoint HERE, not on the encoded frame (r21): it is the
       // registry anti-join whose lineage reads the codes path the append
       // below writes (the read-write-cycle discipline), and cutting the
@@ -5391,69 +5076,8 @@ object Similarity {
     * probe subtracts it from the ADC scan AND the re-rank; compaction
     * makes it physical. Idempotent. Returns the newly-tombstoned count. */
   def forgetPqFromIndex(victimIds: DataFrame, path: String): Long =
-    withIndexWriter(victimIds.sparkSession, path) {
-      val s = victimIds.sparkSession
-      val root = pqLiveRoot(s, path)
-      val located = IndexLifecycle.readStamped(s, s"$root/codes")
-        .join(broadcast(victimIds.select("vec_id").dropDuplicates("vec_id")),
-          Seq("vec_id"), "left_semi")
-        .select("vec_id", "c_label")
-        .localCheckpoint() // the log append below feeds this frame's readers
-      val tombPath = s"$path/tombstones"
-      val exists = graft.ScratchPaths.artifactExists(s, s"$tombPath/_SUCCESS")
-      val newTombs =
-        if (!exists) located
-        else located
-          .join(IndexLifecycle.readStamped(s, tombPath).select("vec_id"),
-            Seq("vec_id"), "left_anti")
-          .localCheckpoint()
-      // The two tails below are INDEPENDENT legs (guide §2.6, the r21
-      // merge of the §2 Par discipline into the takedown path): the
-      // tombstone leg appends located victims + runs maintenance; the
-      // pending leg handles never-located ids. Their results cannot
-      // interact — `early` anti-joins `located`, and every id the
-      // tombstone leg appends IS located, so whether the pending leg's
-      // log scan lists the pre- or post-append tombstone files the
-      // early set is identical (parquet files commit by atomic rename,
-      // so a concurrent listing only ever sees whole files). The
-      // tombstone leg runs on the calling thread — it can re-enter the
-      // writer gate (compaction); the pending leg takes no lock.
-      val (n, _) = Par.run2(
-        {
-          val n0 = newTombs.count()
-          // the log is created only by a takedown that LOCATED something —
-          // a request for absent ids must not mint an empty log that every
-          // future probe pays an anti-join against
-          if (n0 > 0)
-            newTombs.write.mode(if (exists) "append" else "overwrite")
-              .parquet(tombPath)
-          // Maintenance tail, UNCONDITIONAL at the takedown tail (r20): the
-          // r19 gate on novel appends left a crash window — tombstones land,
-          // the driver dies before the check, and the at-least-once replay
-          // appends nothing, so the check never ran and an above-threshold
-          // victim mass sat on the read path until the next NOVEL takedown.
-          // The r20 amortization is what makes the unconditional call
-          // affordable: below the bound it costs zero Spark jobs (existence
-          // guard + footer-stamped log count, both driver-side).
-          maybeCompactPqIndex(s, path)
-          n0
-        },
-        {
-          // pending-forget (r19c — the media q137 ordering at compressed
-          // grain): a takedown racing ahead of its id's first arrival pends
-          // until [[mergePqBatchIntoIndex]] consumes it
-          val early = victimIds.select("vec_id").dropDuplicates("vec_id")
-            .join(broadcast(located.select("vec_id")), Seq("vec_id"), "left_anti")
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-              Seq("vec_id"), "left_anti")
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/pending", "vec_id"),
-              Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-          if (!early.isEmpty)
-            early.write.mode("append").parquet(s"$path/pending")
-        })
-      n
-    }
+    Pq.forget(victimIds, path)((_, _) => ())(
+      maybeCompactPqIndex(victimIds.sparkSession, path))
 
   /** Scheduled compaction, VERSIONED: rewrites the codes artifact minus
     * the tombstoned ids into a fresh committed version, carrying the
@@ -5461,19 +5085,10 @@ object Similarity {
     * the fit is once-per-life, q126b's row), then keep-N GC. No-ops when
     * there are no live victims. */
   def compactPqIndex(s: SparkSession, path: String): Unit =
-    withIndexWriter(s, path) {
-      val root = pqLiveRoot(s, path)
-      val victims =
-        if (graft.ScratchPaths.artifactExists(s, s"$path/tombstones/_SUCCESS"))
-          IndexLifecycle.readStamped(s, s"$root/codes")
-            .join(graft.IndexLifecycle.hintedIdLog(s, s"$path/tombstones", "vec_id"),
-              Seq("vec_id"), "left_semi").count()
-        else 0L
-      if (victims > 0) {
-        val newRoot = s"$path/versions/${nextVersionName(s, path)}"
+    Pq.compact(s, path) { (root, victims) =>
+      Option.when(victims > 0) { newRoot =>
         // the three artifact writes are mutually independent and land in
-        // an UNCOMMITTED version directory — readers resolve through the
-        // _COMMITTED marker written last, so their order is free:
+        // an UNCOMMITTED version directory, so their order is free:
         // overlap them (guide §2.6, r21)
         Par.run3(
           livePqCodes(s, path, root)
@@ -5495,8 +5110,6 @@ object Similarity {
             .toDF("n_rows", "dmicro")
             .write.mode("overwrite").parquet(s"$newRoot/stat")
         }
-        graft.IndexLifecycle.commitVersion(s, path, newRoot,
-          Seq("codes", "codebook", "coarse", "stat"))
       }
     }
 
@@ -5504,14 +5117,8 @@ object Similarity {
     * victims reach `spark.graft.pqCompactTombstoneFrac` (default 0.25)
     * of the stored rows; the q148 gate row's 1/40 = 2.5% victims sit far
     * under it, so the row certifies the LAZY read path specifically. */
-  private def maybeCompactPqIndex(s: SparkSession, path: String): Unit = {
-    val root = pqLiveRoot(s, path)
-    if (graft.IndexLifecycle.tombstoneHeavy(s,
-        IndexLifecycle.readStamped(s, s"$root/codes").select("vec_id"),
-        s"$path/tombstones", "vec_id", "spark.graft.pqCompactTombstoneFrac",
-        memoKey = root))
-      compactPqIndex(s, path)
-  }
+  private def maybeCompactPqIndex(s: SparkSession, path: String): Unit =
+    Pq.maintain(s, path)(compactPqIndex(s, path))
 
   // ---------------------------------------------------------------------
   // PQ DISTORTION DRIFT + REFIT (r19c): the last family asymmetry — ANN
@@ -5599,9 +5206,9 @@ object Similarity {
   }
 
   def pqIndexDistortionReport(s: SparkSession, path: String): DataFrame = {
-    val root = pqLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
-      withIndexWriter(s, path) {
+      Pq.writer(s, path) {
         // re-check under the gate (r20, advice #2): two concurrent
         // reports may both have seen it missing — only one writes
         if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
@@ -5636,23 +5243,19 @@ object Similarity {
   def rebuildPqIndex(s: SparkSession, path: String,
                      beforeCatchup: () => Unit = () => ()): String = {
     withFns(s)
-    val (root, newRoot) = withIndexWriteLock(path) {
-      val nr = s"$path/versions/${nextVersionName(s, path)}"
-      hadoopFs(s, path).mkdirs(new org.apache.hadoop.fs.Path(nr)): Unit
-      (pqLiveRoot(s, path), nr)
-    }
-    val snapshot = pqLiveResidualCorpus(s, path, root)
-      .transform(Tables.maybePersist)
-    val cells = pqFitCells(snapshot)
-    cells.selectExpr("explode(cells) as x").selectExpr("x.s", "x.cid", "x.c")
-      .write.mode("overwrite").parquet(s"$newRoot/codebook")
-    IndexLifecycle.readStamped(s, s"$root/coarse") // frozen — the ANN family owns coarse drift
-      .write.mode("overwrite").parquet(s"$newRoot/coarse")
-    pqEncodedIndex(snapshot.drop("codes"), cells)
-      .write.mode("overwrite").partitionBy("c_label").parquet(s"$newRoot/codes")
-    snapshot.unpersist(blocking = false)
-    beforeCatchup()
-    withIndexWriter(s, path) {
+    Pq.refit(s, path, beforeCatchup) { (root, newRoot) =>
+      val snapshot = pqLiveResidualCorpus(s, path, root)
+        .transform(Tables.maybePersist)
+      val cells = pqFitCells(snapshot)
+      cells.selectExpr("explode(cells) as x").selectExpr("x.s", "x.cid", "x.c")
+        .write.mode("overwrite").parquet(s"$newRoot/codebook")
+      IndexLifecycle.readStamped(s, s"$root/coarse") // frozen — the ANN family owns coarse drift
+        .write.mode("overwrite").parquet(s"$newRoot/coarse")
+      pqEncodedIndex(snapshot.drop("codes"), cells)
+        .write.mode("overwrite").partitionBy("c_label").parquet(s"$newRoot/codes")
+      snapshot.unpersist(blocking = false)
+      cells
+    } { (root, newRoot, cells) =>
       // catchup: live rows merged into the OLD version mid-refit, encoded
       // with the NEW codebook (fresh file listing — the merge appends)
       val missed = pqLiveResidualCorpus(s, path, root).drop("codes")
@@ -5667,10 +5270,7 @@ object Similarity {
       // the decay dial resets to the refit's own distortion
       pqDistortionStat(pqStoredDistortionMicros(s, path, newRoot))
         .write.mode("overwrite").parquet(s"$newRoot/stat")
-      graft.IndexLifecycle.commitVersion(s, path, newRoot,
-        Seq("codes", "codebook", "coarse", "stat"))
     }
-    newRoot
   }
 
   /** The distortion-gated AUTO-REFIT check (the media growth-trigger
@@ -5682,7 +5282,7 @@ object Similarity {
     * waits for the next doubling — a stable population never pays the
     * distortion pass at all. */
   def maybeRefitPqIndex(s: SparkSession, path: String): Boolean = {
-    val root = pqLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     if (!graft.ScratchPaths.artifactExists(s, s"$root/stat/_SUCCESS"))
       return false
     val ref = pqRefFrame(s, root).head()
@@ -5704,7 +5304,7 @@ object Similarity {
       // APPEND to the statref sidecar (r20, advice #2) — never a
       // rewrite of `stat` inside the live version, which a concurrent
       // report may have file-listed already.
-      withIndexWriter(s, path) {
+      Pq.writer(s, path) {
         import s.implicits._
         val refPath = s"$root/statref"
         val mode =
@@ -5722,7 +5322,7 @@ object Similarity {
     * is skipped — plan untouched — when no log exists, so q126's pinned
     * shape holds). */
   def pqIndexProbeStored(s: SparkSession, d: String, path: String): DataFrame = {
-    val root = pqLiveRoot(s, path)
+    val root = IndexLifecycle.resolveIndexRoot(s, path)
     pqIndexProbe(annDelta(s, d),
       IndexLifecycle.readStamped(s, s"$root/coarse"),
       pqCellsOfRead(s, s"$root/codebook"),
@@ -5741,7 +5341,7 @@ object Similarity {
   def pqIndexMerge(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q147-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
+    if (!Pq.exists(s, path)) buildPqIndex(s, d, path)
     mergePqBatchIntoIndex(
       annDelta(s, d).filter(col("vec_id") < 200000L)
         .selectExpr("vec_id + 200000 as vec_id", "embedding"),
@@ -5759,7 +5359,7 @@ object Similarity {
   def pqIndexDistortionCheck(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q149-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
+    if (!Pq.exists(s, path)) buildPqIndex(s, d, path)
     // the gate row PINS the refit dials to their defaults (r20, advice
     // #5): the DuckDB oracle hardcodes 2.0 / 1.5, so a session running
     // non-default dials must not silently diverge on refit_due. The
@@ -5788,8 +5388,8 @@ object Similarity {
   def pqIndexRefit(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q150-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
-    if (pqLiveRoot(s, path) == path) {
+    if (!Pq.exists(s, path)) buildPqIndex(s, d, path)
+    if (IndexLifecycle.resolveIndexRoot(s, path) == path) {
       forgetPqFromIndex(
         IndexLifecycle.readStamped(s, s"$path/codes")
           .filter(pmod(col("vec_id"), lit(40)) === 0).select("vec_id"),
@@ -5810,9 +5410,9 @@ object Similarity {
   def pqIndexForget(s: SparkSession, d: String): DataFrame = {
     val path = graft.ScratchPaths.indexPathFor(
       s"q148-${graft.ScratchPaths.tableFingerprint(d, "embeddings")}", d)
-    if (!pqStoredIndexExists(s, path)) buildPqIndex(s, d, path)
+    if (!Pq.exists(s, path)) buildPqIndex(s, d, path)
     forgetPqFromIndex(
-      IndexLifecycle.readStamped(s, s"${pqLiveRoot(s, path)}/codes")
+      IndexLifecycle.readStamped(s, s"${IndexLifecycle.resolveIndexRoot(s, path)}/codes")
         .filter(pmod(col("vec_id"), lit(40)) === 0).select("vec_id"),
       path)
     pqIndexProbeStored(s, d, path)
@@ -6358,7 +5958,7 @@ object Similarity {
     // time), and the cell value becomes a literal partition filter.
     // Version-resolved ONCE and read live (minus tombstones) — the
     // q119-family read discipline (r19).
-    val assignments = liveAssignments(s, resolveIndexRoot(s, annPath))
+    val assignments = liveAssignments(s, annPath, IndexLifecycle.resolveIndexRoot(s, annPath))
     val qRow = assignments.filter(col("vec_id") === 0)
       .selectExpr("embedding as qe", "nrm as qn", "c_label as q_cell")
       .transform(Tables.maybePersist)
@@ -6676,7 +6276,7 @@ object Similarity {
     // the q102 gate pattern); q119b is the once-per-life build
     "q119_incremental_ann" -> ((s, d) => {
       val path = annIndexPathFor(d)
-      if (!annIndexExists(s, path))
+      if (!Ann.exists(s, path))
         buildAnnIndex(s, d, path)
       incrementalAnnStored(s, d, path)
     }),
@@ -6694,7 +6294,7 @@ object Similarity {
     // per process — the q119 gate pattern); q126b is the build
     "q126_pq_index_probe" -> ((s, d) => {
       val path = pqIndexPathFor(d)
-      if (!pqStoredIndexExists(s, path))
+      if (!Pq.exists(s, path))
         buildPqIndex(s, d, path)
       pqIndexProbeStored(s, d, path)
     }),
@@ -6735,10 +6335,10 @@ object Similarity {
     // process — the q102/q119/q126/q132 gate pattern)
     "q133_hybrid_index_probe" -> ((s, d) => {
       val lexPath = TextAnalysis.lexIndexPathFor(d)
-      if (!TextAnalysis.lexIndexExists(s, lexPath))
+      if (!StandingIndex.Lex.exists(s, lexPath))
         TextAnalysis.buildLexIndex(s, d, lexPath)
       val annPath = annIndexPathFor(d)
-      if (!annIndexExists(s, annPath))
+      if (!Ann.exists(s, annPath))
         buildAnnIndex(s, d, annPath)
       hybridIndexProbe(s, d, lexPath, annPath)
     }),

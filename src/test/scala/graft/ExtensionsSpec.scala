@@ -926,7 +926,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(after.getLong(1) < probe.head.getLong(1),
       "takedown did not reduce the victim delta's match count")
     MediaOps.compactMediaIndex(spark, path)
-    val live = MediaOps.mediaLiveRoot(spark, path)
+    val live = IndexLifecycle.resolveIndexRoot(spark, path)
     assert(spark.read.parquet(s"$live/vecs")
       .filter(col("doc_id") === victim).count() == 0)
     assert(spark.read.parquet(s"$live/vecs").count() == nIdx - 1)
@@ -956,7 +956,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(after.getLong(1) == 1, "takedown did not remove the victim match")
     MediaOps.compactMediaIndex(spark, path)
     assert(spark.read.parquet(
-      s"${MediaOps.mediaLiveRoot(spark, path)}/bands").count() == (nIdx - 1) * 12)
+      s"${IndexLifecycle.resolveIndexRoot(spark, path)}/bands").count() == (nIdx - 1) * 12)
   }
 
   test("q132: the standing-lexical-index probe == the from-scratch q129, bit-identical (r15)") {
@@ -2707,7 +2707,7 @@ class ExtensionsSpec extends SparkSpec {
     // parquet — reads must treat it as "no log", not die inferring schema
     val idx = java.nio.file.Files.createTempDirectory("graft-fsguard-idx").toString
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(s"$idx/tombstones"))
-    assert(MediaOps.tombstonesOf(spark, idx).count() == 0,
+    assert(StandingIndex.Media.tombstones(spark, idx).count() == 0,
       "uncommitted tombstones dir must read as an empty log")
   }
 
@@ -2729,7 +2729,7 @@ class ExtensionsSpec extends SparkSpec {
       MediaOps.forgetMediaFromIndex(Seq(1L).toDF("doc_id"), path)
     }
     assert(e.getMessage.contains("single-writer-per-path"))
-    assert(MediaOps.tombstonesOf(spark, path).count() == 0, "refused write ran anyway")
+    assert(StandingIndex.Media.tombstones(spark, path).count() == 0, "refused write ran anyway")
     // a STALE foreign marker (epoch beyond the TTL = crashed driver):
     // steal it, do the write, release
     java.nio.file.Files.write(marker,
